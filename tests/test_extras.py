@@ -216,7 +216,9 @@ class TestSharedNodes:
             stamp_minzoom(feats, cfg), cfg
         )
         with_pn = vertex_counts(cfg, shared)
-        without = vertex_counts(cfg, None)
+        # shared=None would compute the node set: pass an empty one
+        no_nodes = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64))
+        without = vertex_counts(cfg, no_nodes)
         # the pinned midpoint survives only with -pn
         assert with_pn > without
 

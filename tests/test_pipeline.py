@@ -37,6 +37,17 @@ def test_geocode_extracts_grammar():
     assert len(rows[3][4]) == 2
 
 
+def test_geocode_batch_without_mentions(spark):
+    """An Arrow batch whose pages mention no place yields no rows instead
+    of failing the list<struct> conversion of an empty coords column."""
+    pages = spark.createDataFrame(
+        [("u0", "nothing here"), ("u1", "x near 12.3456, -45.0000 y")],
+        "url string, text string",
+    ).repartition(2, "url")
+    assert geocode.geocode(pages.filter("url = 'u0'")).count() == 0
+    assert [r["url"] for r in geocode.geocode(pages).collect()] == ["u1"]
+
+
 def test_pipeline_counts_and_schema(spark):
     pages = synth.webpages(spark, 500, partitions=4)
     feats = features.serialize(geocode.geocode(pages))

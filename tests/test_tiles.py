@@ -282,7 +282,7 @@ class TestPyramid:
             for r in tilemod.tiles_for_zoom(stamped, 2, cfg).collect()
         }
         # force-split every tile by claiming tiny budgets
-        assigned = tilemod.assign_tiles(stamped, 2, cfg)
+        assigned = tilemod.assign_tiles_all(stamped, cfg, z_lo=2, z_hi=2)
         from pyspark.sql import functions as F
 
         counts = {
@@ -293,8 +293,9 @@ class TestPyramid:
         }
         split = {
             (r["z"], r["x"], r["y"]): (r["n_out"], bytes(r["tile"]))
-            for r in tilemod.tiles_for_zoom(
-                stamped, 2, cfg, hot_counts=counts, split_budget=10
+            for r in tilemod.tiles_fused(
+                stamped, cfg, hot_by_zoom={2: counts}, split_budget=10,
+                z_lo=2, z_hi=2,
             ).collect()
         }
         assert set(direct) == set(split)

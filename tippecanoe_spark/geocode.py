@@ -120,6 +120,9 @@ def geocode(pages: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
                 rows.extend(got)
                 if keep_cols:
                     extras.extend([extra_vals[i]] * len(got))
+            if not rows:
+                # an empty coords column has no Arrow list<struct> type
+                continue
             out = {
                 "url": [r[0] for r in rows],
                 "mention_seq": np.array([r[1] for r in rows], dtype=np.int32),

@@ -1,29 +1,29 @@
-"""Pyramid driver — the traverse_zooms analog (tile.cpp:3272-3623),
-Spark-first, in two physical modes:
+"""Pyramid driver — the traverse_zooms analog (tile.cpp:3272-3623).
+
+Every tile is built by one code path, :func:`tile.tiles_fused`: tile
+assignment for a zoom range, ONE shuffle keyed (zz, tx, ty), and the
+streaming kernel.  The driver runs it in two modes:
 
 **Fused** (default, ``out_dir=None`` or ``fused=True``): the whole
-z-range rides ONE shuffle.  Per-zoom tile assignments (pure Catalyst)
-union into a single relation keyed (zz, tx, ty); the streaming kernel
-tiles every zoom in the same pass.  Job count for a z0-z14 build drops
-from ~45 (3 per zoom) to 3 (survivor stats, optional hot stats, the
-build itself) — per-job fixed cost is what kills scaling efficiency on
-short zooms, and on a real cluster each job is a full barrier.
+z-range in one build.  Job count for a z0-z14 build drops from ~45
+(3 per zoom) to 3 (survivor stats, optional hot stats, the build
+itself) — per-job fixed cost is what kills scaling efficiency on short
+zooms, and on a real cluster each job is a full barrier.  ``fused=True``
+with ``out_dir`` writes all zooms in one job (partitioned by z) and
+manifests afterwards — resumable at whole-build granularity only.
 
-**Per-zoom** (``out_dir`` set, ``fused=False``): one job per zoom with a
-parquet partition ``{out_dir}/z={z}/`` + ``_zoom_{z}.json`` manifest per
-zoom — the per-zoom checkpoint the north rule requires: a re-run skips
-zooms whose manifest exists (idempotent resume) and the manifest carries
-per-zoom lineage (input rows, tile count, byte totals, hot splits).
-``fused=True`` with ``out_dir`` writes all zooms in one job
-(partitioned by z) and manifests afterwards — resumable at whole-build
-granularity only.
+**Per-zoom** (``out_dir`` set, ``fused=False``): the same build over
+``[z, z]``, one job per zoom, with a parquet partition
+``{out_dir}/z={z}/`` + ``_zoom_{z}.json`` manifest per zoom — the
+per-zoom checkpoint the north rule requires: a re-run skips zooms whose
+manifest exists (idempotent resume) and the manifest carries per-zoom
+lineage (input rows, tile count, byte totals, hot splits).
 
-Hot-tile detection in both modes starts from one cheap aggregation:
-survivors-per-zoom from ``groupBy(feature_minzoom)`` (a cached scan);
-only zooms whose survivor count exceeds the task budget pay the per-tile
-count shuffle (statistics-driven split planning — the reference's
-largest-shard-first scheduling, tile.cpp:3327-3378, turned into an
-explicit plan)."""
+Hot-tile detection in both modes starts from one cheap aggregation
+(survivors per zoom); only zooms whose survivor count exceeds the task
+budget pay the per-tile count shuffle (statistics-driven split planning
+— the reference's largest-shard-first scheduling, tile.cpp:3327-3378,
+turned into an explicit plan)."""
 
 from __future__ import annotations
 
@@ -140,9 +140,9 @@ def hot_tiles_by_zoom(
     returns only tiles above the task budget."""
     if not zooms:
         return {}
-    assigned = tilemod.assign_tiles_all(stamped, cfg).filter(
-        F.col("zz").isin(zooms)
-    )
+    assigned = tilemod.assign_tiles_all(
+        stamped, cfg, z_lo=min(zooms), z_hi=max(zooms)
+    ).filter(F.col("zz").isin(zooms))
     rows = (
         assigned.groupBy("zz", "tx", "ty")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -173,20 +173,15 @@ def build_pyramid(
     try:
         if fused:
             return _build_fused(spark, feats, cfg, out_dir)
-        vd = None
+        leaves = None
         if cfg.variable_depth_pyramid:
-            # -at in per-zoom mode: one up-front leaf plan shared by every
-            # zoom (vardepth.py); leaf tiles come pre-encoded, descendants
-            # are excluded from each zoom's assignment
+            # -at: one leaf plan (vardepth.py) shared by every zoom
             from . import vardepth
 
-            featuresT = tilemod.with_dateline_twins(feats, cfg)
-            assigned_all = tilemod.assign_tiles_all(featuresT, cfg)
-            leaf_tiles, leaf_keys = vardepth.leaf_plan(
-                featuresT, cfg, _shared_arrays(feats, cfg)
+            leaves = vardepth.leaf_plan(
+                tilemod.with_dateline_twins(feats, cfg), cfg,
+                _shared_arrays(feats, cfg),
             )
-            drop = vardepth.drop_keys(assigned_all, leaf_keys, cfg).persist()
-            vd = (leaf_tiles, drop)
         manifests: list[dict] = []
         for z in range(cfg.minzoom, cfg.maxzoom + 1):
             if out_dir and resume:
@@ -195,7 +190,7 @@ def build_pyramid(
                     with open(mp) as fh:
                         manifests.append(json.load(fh))
                     continue
-            manifests.append(build_zoom(spark, feats, z, cfg, out_dir, vd=vd))
+            manifests.append(build_zoom(spark, feats, z, cfg, out_dir, leaves))
         return manifests
     finally:
         feats.unpersist()
@@ -259,34 +254,24 @@ def build_zoom(
     z: int,
     cfg: TilingConfig,
     out_dir: str | None = None,
-    vd: tuple[DataFrame, DataFrame] | None = None,
+    leaves: tuple[DataFrame, DataFrame] | None = None,
 ) -> dict:
+    """One zoom of the per-zoom mode: the fused build over ``[z, z]``,
+    checkpointed to ``{out_dir}/z={z}/`` with its manifest.  ``leaves``
+    is the build's -at leaf plan."""
     t0 = time.time()
     # statistics pass gated by a cheap cached-scan count — if the zoom's
     # survivors fit one task budget, no tile can be hot
     hot: dict[tuple[int, int], int] = {}
     n_surviving = stamped.filter(F.col("feature_minzoom") <= F.lit(z)).count()
     if n_surviving > cfg.max_features_per_task:
-        assigned = tilemod.assign_tiles(stamped, z, cfg)
-        counts = (
-            assigned.groupBy("tx", "ty")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > cfg.max_features_per_task)
-            .collect()
-        )
-        hot = {(r["tx"], r["ty"]): r["n"] for r in counts}
-
-    drop_z = None
-    if vd is not None:
-        drop_z = vd[1].filter(F.col("zz") == z).select("tx", "ty")
-    tiles = tilemod.tiles_for_zoom(
-        stamped, z, cfg, hot_counts=hot,
+        hot = hot_tiles_by_zoom(stamped, cfg, [z]).get(z, {})
+    tiles = tilemod.tiles_fused(
+        stamped, cfg, hot_by_zoom={z: hot},
         split_budget=cfg.max_features_per_task,
         shared=_shared_arrays(stamped, cfg),
-        drop_tiles=drop_z,
+        z_lo=z, z_hi=z, leaves=leaves,
     )
-    if vd is not None:
-        tiles = tiles.unionByName(vd[0].filter(F.col("z") == z))
     if out_dir:
         zdir = os.path.join(out_dir, f"z={z}")
         tiles.write.mode("overwrite").parquet(zdir)

@@ -6,7 +6,7 @@ Physical strategy (chosen for deep-zoom scale, where most tiles hold a
 handful of points):
 
 - **Cold tiles** (the vast majority): one hash shuffle on the tile key +
-  ``sortWithinPartitions(tx, ty, index, seq)`` + a *streaming*
+  ``sortWithinPartitions(zz, tx, ty, index, seq)`` + a *streaming*
   ``mapInPandas`` kernel that walks each sorted partition, slicing
   consecutive tile groups out of the Arrow batches (carrying partial
   groups across batch boundaries).  This avoids per-group
@@ -19,6 +19,10 @@ handful of points):
   split-associative stages per sub-partition, merge per tile for the
   order-dependent stages.  These are few, so ``applyInPandas`` per group
   is fine.
+
+One driver, :func:`tiles_fused`, assigns, shuffles and kernels the tiles
+of any zoom range; a per-zoom build (:func:`tiles_for_zoom`, and the
+pyramid's checkpointed mode) is that build over ``[z, z]``.
 
 Stage semantics:
 
@@ -119,27 +123,21 @@ def _tile_schema(cfg) -> T.StructType:
 _FAST_MAX = 256
 
 
-def _tile_partitions(df: DataFrame, z: int | None = None) -> int:
+# tile-shuffle partitions per core (see _tile_partitions)
+_TILE_PART_MULT = 24
+
+
+def _tile_partitions(df: DataFrame) -> int:
     """Partition count for the tile shuffle: well above core count so the
     hash of (z,tx,ty) balances despite skewed tile sizes (city hot spots
     put ~20% of rows in a handful of tiles; at cores==partitions one
     straggler partition gates the stage).  24× cores keeps the straggler
-    tail under ~2 task-lengths while per-task Arrow setup stays <2%.
-
-    For a SINGLE-zoom build the key space is only 4^z tiles — partitions
-    beyond the distinct-key count are guaranteed-empty tasks (~4 ms of
-    pure scheduling each; at z4 that was ~750 empty tasks per stage), so
-    the count is capped at 4^z."""
-    import os as _os
-
-    mult = int(_os.environ.get("TCS_TILE_PART_MULT", "24"))
+    tail under ~2 task-lengths while per-task Arrow setup stays <2%."""
     spark = df.sparkSession
     n = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        spark.sparkContext.defaultParallelism * mult,
+        spark.sparkContext.defaultParallelism * _TILE_PART_MULT,
     )
-    if z is not None and 2 * z < 40:
-        n = min(n, 4**z)
     return max(n, 1)
 
 
@@ -301,191 +299,74 @@ def _line_cover_local(
 _WALK_FLUSH = 200_000  # emitted tile-rows per yielded pandas frame
 
 
-def _walk_wide_lines(batches, cover_fn, z_col: str | None = None):
-    """Shared chunked driver for the wide-line walks: calls ``cover_fn``
-    per input row, assembles output frames of at most ``_WALK_FLUSH``
-    rows (one deep-zoom line can cover thousands of tiles — emitting a
-    whole input batch at once OOMs the python worker)."""
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        geoms = pdf["geometry"].to_numpy()
-        zzs = pdf[z_col].to_numpy() if z_col else None
-        dls = pdf["_dl"].to_numpy() if "_dl" in pdf.columns else None
-        src_rows: list[int] = []
-        txs: list[int] = []
-        tys: list[int] = []
-        sub_geoms: list[bytes] = []
+def _walk_wide_lines(wide: DataFrame, keys: list[str], cover_fn) -> DataFrame:
+    """The exact conservative walk for wide-span lines: one row per
+    (row of ``wide``, covered tile) carrying the tile-local sub-geometry
+    from ``cover_fn(geometry, zz, dx)`` (``zz`` is None when ``keys``
+    holds no zoom column).  Returns ``wide``'s columns plus tx, ty.
 
-        def flush():
-            out = pdf.iloc[np.array(src_rows, dtype=np.int64)].reset_index(drop=True)
-            out["geometry"] = sub_geoms
-            out["tx"] = np.array(txs, dtype=np.int32)
-            out["ty"] = np.array(tys, dtype=np.int32)
-            if dls is not None:
-                # emitted sub-geometry is pre-shifted by the twin delta
-                out["_dl"] = np.zeros(len(out), dtype=np.int64)
-            return out
-
-        for i in range(n):
-            cover = cover_fn(
-                geoms[i],
-                zzs[i] if zzs is not None else None,
-                int(dls[i]) if dls is not None else 0,
-            )
-            for t_x, t_y, sub in cover:
-                src_rows.append(i)
-                txs.append(t_x)
-                tys.append(t_y)
-                sub_geoms.append(sub)
-            if len(src_rows) >= _WALK_FLUSH:
-                yield flush()
-                src_rows, txs, tys, sub_geoms = [], [], [], []
-        if src_rows:
-            yield flush()
-
-
-def assign_tiles(features: DataFrame, z: int, cfg: TilingConfig) -> DataFrame:
-    """Tag each surviving feature with every (tx,ty) tile it touches at
-    zoom z, including the buffer overhang — the Spark form of the child-
-    shard rewrite (tile.cpp:443-534).
-
-    Two paths: features whose bbox spans few tiles (points, small
-    polygons/lines — the overwhelming majority) use pure-Catalyst bbox
-    sequence/explode (pushdown-friendly, JVM-side).  Wide-span LINES take
-    an exact conservative-rasterization walk instead: a long diagonal
-    touches O(span) tiles, but its bbox product is O(span²) — exploding
-    the bbox at deep zooms detonates into millions of phantom rows that
-    the per-tile clip would discard anyway."""
-    shift = WORLD_BITS - z
-    buf = buffer_world(z, cfg)
-    nmax = (1 << z) - 1
-    # multiplier candidates survive log(M)/log(droprate) zooms early
-    # (tile.cpp:1123,1304); the per-lead cap applies in the tile kernel.
-    # Dateline twins are exempt from the early admission — their forced
-    # minzoom >= 1 is structural (the z0 kernel emits the wrap itself).
-    extra_zooms = F.when(_twin_col(features), F.lit(0.0)).otherwise(
-        F.lit(cfg.multiplier_extra_zooms())
-    )
-    natural = F.col("feature_minzoom") <= (F.lit(float(z)) + extra_zooms)
-    if cfg.full_stream_admission():
-        # every dropped feature must still stream through its tile (-E
-        # attribute folding and/or the point-extent spacing chain) —
-        # admit everything; the kernel's count machine does the dropping
-        natural = F.lit(True)
-    surviving = features.filter(natural)
-    if "feature_maxzoom" in features.columns:
-        surviving = surviving.filter(F.col("feature_maxzoom") >= F.lit(z))
-    tx0 = F.greatest(F.lit(0), F.shiftright(F.col("minx") - buf - 1, shift)).cast("int")
-    tx1 = F.least(F.lit(nmax), F.shiftright(F.col("maxx") + buf, shift)).cast("int")
-    ty0 = F.greatest(F.lit(0), F.shiftright(F.col("miny") - buf - 1, shift)).cast("int")
-    ty1 = F.least(F.lit(nmax), F.shiftright(F.col("maxy") + buf, shift)).cast("int")
-    if z == 0 and cfg.buffer > 0:
-        # z0 edge membership (tile.cpp:977-1001): a feature touching (or
-        # fully beyond) the ±world edge ALWAYS reaches the single z0
-        # tile — the kernel concatenates the ±world copy and clips, so a
-        # high-longitude geometry renders at its wrapped position even
-        # when its own clamped tile range is empty
-        world = 1 << 32
-        buf0 = world * cfg.buffer // 256
-        not_twin = (
-            (F.col("_dl") == 0) if "_dl" in features.columns else F.lit(True)
-        )
-        edge0 = not_twin & (
-            (F.col("minx") <= buf0) | (F.col("maxx") >= world - buf0)
-        )
-        tx0 = F.when(edge0, F.lit(0)).otherwise(tx0).cast("int")
-        tx1 = F.when(edge0, F.lit(0)).otherwise(tx1).cast("int")
-    # an empty clamped range (feature fully off-world on one side) must
-    # drop the row — F.sequence(a, b) with a > b DESCENDS, emitting
-    # phantom out-of-range tiles
-    surviving = surviving.filter((tx1 >= tx0) & (ty1 >= ty0))
-    edge_wide = None
-    if cfg.full_stream_admission() and z == 1:
-        # full-stream + dateline, z1 ONLY: the z0 wrap concatenates the ±world
-        # copy and the serialized bbox spans the copies' hull, so an
-        # edge-touching feature reaches EVERY z1 tile of its y-band and
-        # its attributes accumulate there even where its geometry clips
-        # empty (the reference's "XXX should continue, but affects test
-        # outputs" reader path, tile.cpp:1205-1209).  Deeper zooms see
-        # only the copies that survived the parent's clip (rewrite skips
-        # empty geometry, tile.cpp:444), i.e. the ordinary per-copy
-        # assignment — z0 is the only tile wide enough to hold both
-        # copies, so the hull membership exists exactly at z1.  Twins
-        # (_dl != 0) keep their shifted bbox (the rendering copies).
-        world = 1 << 32
-        buf0 = world * cfg.buffer // 256
-        not_twin = (
-            (F.col("_dl") == 0) if "_dl" in features.columns else F.lit(True)
-        )
-        edge_wide = not_twin & (
-            (F.col("minx") <= buf0) | (F.col("maxx") >= world - buf0)
-        )
-        tx0 = F.when(edge_wide, F.lit(0)).otherwise(tx0).cast("int")
-        tx1 = F.when(edge_wide, F.lit(nmax)).otherwise(tx1).cast("int")
-    span = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-    is_wide_line = (F.col("geom_type") == 2) & (span > _WIDE_SPAN)
-    if edge_wide is not None:
-        # widened rows need the bbox explode (all-x membership), not the
-        # geometry walk
-        is_wide_line = is_wide_line & ~edge_wide
-
-    small = (
-        surviving.filter(~is_wide_line)
-        .withColumn("tx", F.explode(F.sequence(tx0, tx1)))
-        .withColumn("ty", F.explode(F.sequence(ty0, ty1)))
-    )
-
-    wide = surviving.filter(is_wide_line)
-    out_cols = [f.name for f in features.schema.fields] + ["tx", "ty"]
-    has_dl = "_dl" in features.columns
-    walk_cols = ["feature_id", "minx"] + (["_dl"] if has_dl else []) + ["geometry"]
-    walk_fields = [
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("minx", T.LongType()),
-    ]
-    if has_dl:
-        walk_fields.append(T.StructField("_dl", T.LongType()))
+    One deep-zoom line can cover thousands of tiles: the Python kernel
+    carries ONLY the row key (``keys``, unique per source row) and the
+    geometry, in output frames of at most ``_WALK_FLUSH`` rows (emitting
+    a whole input batch at once OOMs the python worker), and the JVM
+    re-attaches the other columns with a broadcast join (attrs/url
+    string duplication in pandas was the dominant assignment cost)."""
+    has_dl = "_dl" in wide.columns
+    z_col = "zz" if "zz" in keys else None
+    walk_cols = keys + (["_dl"] if has_dl else []) + ["geometry"]
     walk_schema = T.StructType(
-        walk_fields
+        [wide.schema[c] for c in walk_cols]
         + [
-            T.StructField("geometry", T.BinaryType()),
             T.StructField("tx", T.IntegerType()),
             T.StructField("ty", T.IntegerType()),
         ]
     )
 
     def walk(batches):
-        # one wide line can cover thousands of tiles at deep zooms:
-        # walk only (key, geometry) and flush incrementally; the JVM
-        # re-attaches the other columns via broadcast join
-        yield from _walk_wide_lines(
-            batches,
-            lambda row_geom, _z, dx: _line_cover_local(
-                row_geom, shift, buf + _cover_slack(z, cfg), nmax, dx
-            ),
-        )
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            geoms = pdf["geometry"].to_numpy()
+            zzs = pdf[z_col].to_numpy() if z_col else None
+            dls = pdf["_dl"].to_numpy() if has_dl else None
+            src_rows: list[int] = []
+            txs: list[int] = []
+            tys: list[int] = []
+            sub_geoms: list[bytes] = []
+
+            def flush():
+                out = pdf.iloc[np.array(src_rows, dtype=np.int64)].reset_index(drop=True)
+                out["geometry"] = sub_geoms
+                out["tx"] = np.array(txs, dtype=np.int32)
+                out["ty"] = np.array(tys, dtype=np.int32)
+                if dls is not None:
+                    # emitted sub-geometry is pre-shifted by the twin delta
+                    out["_dl"] = np.zeros(len(out), dtype=np.int64)
+                return out
+
+            for i in range(n):
+                cover = cover_fn(
+                    geoms[i],
+                    zzs[i] if zzs is not None else None,
+                    int(dls[i]) if dls is not None else 0,
+                )
+                for t_x, t_y, sub in cover:
+                    src_rows.append(i)
+                    txs.append(t_x)
+                    tys.append(t_y)
+                    sub_geoms.append(sub)
+                if len(src_rows) >= _WALK_FLUSH:
+                    yield flush()
+                    src_rows, txs, tys, sub_geoms = [], [], [], []
+            if src_rows:
+                yield flush()
 
     walked = wide.select(*walk_cols).mapInPandas(walk, schema=walk_schema)
-    # walked sub-geometry is pre-shifted by the twin delta, so its _dl=0
-    # replaces the source row's (drop the source's to avoid the clash)
-    wide_out = walked.join(
-        F.broadcast(wide.drop("geometry", *(["_dl"] if has_dl else []))),
-        ["feature_id", "minx"],
-    ).select(*out_cols)
-    out = small.select(*out_cols).unionByName(wide_out)
-    if cfg.full_stream_admission():
-        return out  # full admission above subsumes the forced keeps
-    # forced first-per-tile admissions the natural filter skipped
-    # (tile.cpp:1290-1301); the kernel re-checks stream-first exactly
-    forced = forced_keep_tiles(features, cfg).filter(F.col("zz") == z).drop("zz")
-    extra = (
-        features.join(forced, ["seq", "minx"])
-        .filter(F.col("feature_minzoom") > (F.lit(float(z)) + extra_zooms))
-        .select(*out_cols)
+    # the walked _dl=0 replaces the source row's (drop it to avoid the clash)
+    return walked.join(
+        F.broadcast(wide.drop("geometry", *(["_dl"] if has_dl else []))), keys
     )
-    return out.unionByName(extra)
 
 
 def with_dateline_twins(features: DataFrame, cfg: TilingConfig) -> DataFrame:
@@ -759,9 +640,10 @@ def assign_tiles_all(
     Wide lines take the exact conservative walk across all zooms in one
     Arrow kernel.
 
-    ``z_lo``/``z_hi`` restrict the produced zoom range (inclusive) —
-    the subtree fan-out path uses them to keep only the shallow zooms
-    (or only the deep zooms under hot roots) on per-(zoom, tile) rows."""
+    ``z_lo``/``z_hi`` restrict the produced zoom range (inclusive) — a
+    per-zoom build asks for one zoom, and the subtree fan-out path keeps
+    only the shallow zooms (or only the deep zooms under hot roots) on
+    per-(zoom, tile) rows."""
     lo = cfg.minzoom if z_lo is None else max(cfg.minzoom, z_lo)
     hi = cfg.maxzoom if z_hi is None else min(cfg.maxzoom, z_hi)
     top = F.lit(hi)
@@ -775,9 +657,12 @@ def assign_tiles_all(
     eff_min = F.ceil(F.col("feature_minzoom") - extra_zooms).cast("int")
     if cfg.full_stream_admission():
         # dropped features still stream through every zoom's tile (see
-        # tiles_for_zoom / full_stream_admission)
+        # TilingConfig.full_stream_admission)
         eff_min = F.lit(cfg.minzoom)
-    zz = F.explode(F.sequence(F.greatest(eff_min, F.lit(lo)), top))
+    # a single-zoom build tags a literal zoom, so Catalyst folds the zoom
+    # arithmetic below to constants: the exploded form cost a fresh-session
+    # per-zoom build ~0.5 s more per zoom (geojson-cli, 4 cores)
+    zz = F.explode(F.sequence(F.greatest(eff_min, F.lit(lo)), top)) if lo < hi else F.lit(lo)
     tagged = features.filter(
         (eff_min <= F.lit(hi))
         & (top >= F.greatest(eff_min, F.lit(lo)))
@@ -794,7 +679,11 @@ def assign_tiles_all(
     ty0 = F.greatest(F.lit(0.0), F.floor((F.col("miny") - buf - 1) / pow_shift)).cast("int")
     ty1 = F.least(nmax, F.floor((F.col("maxy") + buf) / pow_shift)).cast("int")
     if cfg.buffer > 0:
-        # z0 edge membership (tile.cpp:977-1001) — see assign_tiles
+        # z0 edge membership (tile.cpp:977-1001): a feature touching (or
+        # fully beyond) the ±world edge ALWAYS reaches the single z0
+        # tile — the kernel concatenates the ±world copy and clips, so a
+        # high-longitude geometry renders at its wrapped position even
+        # when its own clamped tile range is empty
         world0 = 1 << 32
         buf00 = world0 * cfg.buffer // 256
         not_twin0 = (
@@ -811,9 +700,16 @@ def assign_tiles_all(
     tagged = tagged.filter((tx1 >= tx0) & (ty1 >= ty0))
     edge_wide = None
     if cfg.full_stream_admission():
-        # full-stream + dateline: full-x membership at zz == 1 ONLY (see
-        # tiles_for_zoom — the z0 wrap's hull bbox reaches every z1
-        # column; deeper zooms revert to per-copy assignment)
+        # full-stream + dateline: full-x membership at zz == 1 ONLY.  The
+        # z0 wrap concatenates the ±world copy and the serialized bbox
+        # spans the copies' hull, so an edge-touching feature reaches
+        # EVERY z1 tile of its y-band and its attributes accumulate there
+        # even where its geometry clips empty (the reference's "XXX should
+        # continue, but affects test outputs" reader path,
+        # tile.cpp:1205-1209).  Deeper zooms see only the copies that
+        # survived the parent's clip (rewrite skips empty geometry,
+        # tile.cpp:444), i.e. the ordinary per-copy assignment.  Twins
+        # (_dl != 0) keep their shifted bbox (the rendering copies).
         world = 1 << 32
         buf0 = world * cfg.buffer // 256
         not_twin = (
@@ -837,37 +733,7 @@ def assign_tiles_all(
         .withColumn("ty", F.explode(F.sequence(ty0, ty1)))
     )
 
-    wide = tagged.filter(is_wide_line)
-    out_schema = T.StructType(
-        features.schema.fields
-        + [
-            T.StructField("zz", T.IntegerType()),
-            T.StructField("tx", T.IntegerType()),
-            T.StructField("ty", T.IntegerType()),
-        ]
-    )
-    cols = [f.name for f in out_schema.fields]
-
-    # the walk fans one deep-zoom line out to thousands of tile rows —
-    # carry ONLY (key, geometry) through the python kernel and let the
-    # JVM re-attach the other columns with a broadcast join (attrs/url
-    # string duplication in pandas was the dominant assignment cost)
-    has_dl = "_dl" in features.columns
-    walk_fields = [
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("minx", T.LongType()),
-        T.StructField("zz", T.IntegerType()),
-    ]
-    if has_dl:
-        walk_fields.append(T.StructField("_dl", T.LongType()))
-    walk_schema = T.StructType(
-        walk_fields
-        + [
-            T.StructField("geometry", T.BinaryType()),
-            T.StructField("tx", T.IntegerType()),
-            T.StructField("ty", T.IntegerType()),
-        ]
-    )
+    cols = [f.name for f in features.schema.fields] + ["zz", "tx", "ty"]
 
     def cover_fn(row_geom, zz, dx):
         z = int(zz)
@@ -877,56 +743,35 @@ def assign_tiles_all(
             (1 << z) - 1, dx,
         )
 
-    def walk(batches):
-        yield from _walk_wide_lines(batches, cover_fn, z_col="zz")
-
-    if hi <= 6:
-        # tiny builds (fixture tests): inline walk keeps the single-pass
-        # plan — the broadcast barrier below costs ~1-3s of serial driver
-        # time per build, which dominates at this scale.  Anything deeper
-        # takes the slim path: even at z8 the wide-line fan-out is ~80
-        # tiles per (feature, zoom) row, and carrying the full attr/url
-        # columns through pandas was measured at 25s of a 37s assignment
-        # (the slim walk + broadcast re-attach cuts it to ~the explode
-        # cost)
-        def walk_full(batches):
-            for out in _walk_wide_lines(batches, cover_fn, z_col="zz"):
-                yield out[cols]
-
-        return (
-            small.select(*cols)
-            .unionByName(wide.mapInPandas(walk_full, schema=out_schema))
-            .unionByName(
-                _forced_extra_rows(features, cfg, extra_zooms, cols, lo, hi)
-            )
-        )
-
-    walk_cols = ["feature_id", "minx", "zz"] + (["_dl"] if has_dl else []) + ["geometry"]
-    walked = wide.select(*walk_cols).mapInPandas(walk, schema=walk_schema)
     # (feature_id, minx, zz) uniquely identifies the source row even with
-    # dateline twins (twins share feature_id but differ in minx); walked
-    # sub-geometry is pre-shifted, so its _dl=0 replaces the source's
-    wide_out = walked.join(
-        F.broadcast(wide.drop("geometry", *(["_dl"] if has_dl else []))),
-        ["feature_id", "minx", "zz"],
-    ).select(*cols)
+    # dateline twins (twins share feature_id but differ in minx)
+    wide = _walk_wide_lines(
+        tagged.filter(is_wide_line), ["feature_id", "minx", "zz"], cover_fn
+    )
     return (
         small.select(*cols)
-        .unionByName(wide_out)
+        .unionByName(wide.select(*cols))
         .unionByName(_forced_extra_rows(features, cfg, extra_zooms, cols, lo, hi))
     )
 
 
-def _subtree_root_zoom(cfg: TilingConfig) -> int | None:
-    """Root zoom R for the fused pyramid's subtree fan-out, or None when
-    the per-(zoom, tile) assignment must be used everywhere.
+def _subtree_root_zoom(cfg: TilingConfig, lo: int, hi: int) -> int | None:
+    """Root zoom R for the subtree fan-out of a build over zooms
+    ``[lo, hi]``, or None when the per-(zoom, tile) assignment must be
+    used everywhere.  The kernel expands each root to every zoom
+    R..maxzoom, so only a range holding all of them (``lo <= R`` and
+    ``hi == maxzoom``) can use it; a per-zoom build never does.
 
     Modes with cross-row semantics the in-kernel expansion does not
     reproduce are excluded: full-stream admission (every feature already
     rides every zoom, and its z1 dateline hull-membership special case
     lives in the Catalyst assignment), the vardepth planner (prunes
-    per-(zz, tx, ty) keys with an anti-join), and the zoom-global retry
-    mode (single-zoom builds only)."""
+    per-(zz, tx, ty) keys with an anti-join), the zoom-global retry
+    mode (single-zoom builds only), and point multipliers
+    (``retain_points_multiplier > 1``): the subtree admits every
+    non-explicit sub-minzoom row as a forced candidate, and the M > 1
+    count machine keeps any such row as a follower, where the M == 1
+    branch re-checks it exactly."""
     if cfg.subtree_depth <= 0:
         return None
     if (
@@ -934,10 +779,11 @@ def _subtree_root_zoom(cfg: TilingConfig) -> int | None:
         or cfg.global_threshold_retry
         or cfg.vardepth_confirm
         or cfg.variable_depth_pyramid
+        or cfg.retain_points_multiplier > 1
     ):
         return None
     R = max(cfg.minzoom, 2, cfg.maxzoom - cfg.subtree_depth)
-    if R >= cfg.maxzoom:
+    if R >= cfg.maxzoom or lo > R or hi < cfg.maxzoom:
         return None
     return R
 
@@ -996,39 +842,15 @@ def _subtree_root_rows(
         .withColumn("tx", F.explode(F.sequence(tx0, tx1)))
         .withColumn("ty", F.explode(F.sequence(ty0, ty1)))
     )
-    wide = cand.filter(is_wide_line)
-    out_cols = [f.name for f in features.schema.fields] + ["tx", "ty"]
-    has_dl = "_dl" in features.columns
-    walk_cols = ["feature_id", "minx"] + (["_dl"] if has_dl else []) + ["geometry"]
-    walk_fields = [
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("minx", T.LongType()),
-    ]
-    if has_dl:
-        walk_fields.append(T.StructField("_dl", T.LongType()))
-    walk_schema = T.StructType(
-        walk_fields
-        + [
-            T.StructField("geometry", T.BinaryType()),
-            T.StructField("tx", T.IntegerType()),
-            T.StructField("ty", T.IntegerType()),
-        ]
-    )
-
-    def walk(batches):
-        yield from _walk_wide_lines(
-            batches,
-            lambda row_geom, _z, dx: _line_cover_local(
-                row_geom, shift, buf + _cover_slack(R, cfg), nmax, dx
-            ),
-        )
-
-    walked = wide.select(*walk_cols).mapInPandas(walk, schema=walk_schema)
-    wide_out = walked.join(
-        F.broadcast(wide.drop("geometry", *(["_dl"] if has_dl else []))),
+    wide = _walk_wide_lines(
+        cand.filter(is_wide_line),
         ["feature_id", "minx"],
-    ).select(*out_cols)
-    out = small.select(*out_cols).unionByName(wide_out)
+        lambda row_geom, _z, dx: _line_cover_local(
+            row_geom, shift, buf + _cover_slack(R, cfg), nmax, dx
+        ),
+    )
+    out_cols = [f.name for f in features.schema.fields] + ["tx", "ty"]
+    out = small.select(*out_cols).unionByName(wide.select(*out_cols))
     if exclude_keys:
         key_col = F.shiftleft(F.col("tx").cast("long"), R).bitwiseOR(
             F.col("ty").cast("long")
@@ -3418,22 +3240,6 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
     forced_on = cfg.keep_first_per_tile and not cfg.no_feature_dropping
 
     def kernel(batches):
-        import os as _os
-
-        if _os.environ.get("TCS_PROFILE"):
-            import cProfile
-
-            pr = cProfile.Profile()
-            pr.enable()
-            try:
-                yield from _kernel_impl(batches)
-            finally:
-                pr.disable()
-                pr.dump_stats(f"/tmp/kprof_{_os.getpid()}_{id(batches)}.prof")
-            return
-        yield from _kernel_impl(batches)
-
-    def _kernel_impl(batches):
         carry: dict | None = None
         out_rows: list[dict] = []
 
@@ -3726,68 +3532,27 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
 
 
 # ---------------------------------------------------------------------------
-# Spark drivers for one zoom
+# Spark driver: assignment → one shuffle → stream kernel
 # ---------------------------------------------------------------------------
 
-def tiles_for_zoom(
-    features: DataFrame,
-    z: int,
-    cfg: TilingConfig,
-    hot_counts: dict[tuple[int, int], int] | None = None,
-    split_budget: int = 200_000,
-    shared=None,
-    drop_tiles: DataFrame | None = None,
-) -> DataFrame:
-    """Build all tiles at zoom z.  ``hot_counts`` (tile → feature count,
-    from a cheap pre-aggregation) routes oversized tiles through the
-    hierarchical split-and-merge path: sub-partition by child quadkey at a
-    depth that bounds per-task features, prepare each sub-partition
-    independently, then merge per tile for the sequential stages.
-    ``drop_tiles`` ((tx, ty) keys) excludes vardepth-pruned tiles."""
-    features = with_dateline_twins(features, cfg)
-    assigned = assign_tiles(features, z, cfg).withColumn("zz", F.lit(z))
-    if drop_tiles is not None:
-        assigned = assigned.join(drop_tiles, ["tx", "ty"], "left_anti")
-    shift = WORLD_BITS - z
-
-    hot = {t: c for t, c in (hot_counts or {}).items() if c > split_budget}
-
-    def stream(df: DataFrame) -> DataFrame:
-        # mapInPandas cannot column-prune: drop non-kernel columns
-        # before the shuffle
-        kcols = [c for c in _STREAM_COLS + ("zz",) if c in df.columns]
-        shuffled = df.select(*kcols).repartition(
-            _tile_partitions(df, z), F.col("tx"), F.col("ty")
-        ).sortWithinPartitions("zz", "tx", "ty", "index", "seq")
-        return shuffled.mapInPandas(
-            make_stream_kernel(cfg, shared), schema=_tile_schema(cfg)
-        )
-
-    if not hot:
-        return stream(assigned)
-
-    # split depth per hot tile: enough child-quad levels that each
-    # sub-partition holds <= split_budget features
-    max_count = max(hot.values())
-    depth = 1
-    while (max_count >> (2 * depth)) > split_budget and depth < 8:
-        depth += 1
-    hot_keys = [(t[0] << z) | t[1] for t in hot]
-    hot_col = F.shiftleft(F.col("tx").cast("long"), z).bitwiseOR(F.col("ty").cast("long"))
-    is_hot = hot_col.isin(hot_keys)
-
-    cold = assigned.filter(~is_hot)
-    hot_df = assigned.filter(is_hot)
-    return stream(cold).unionByName(_hot_tiles(hot_df, z, cfg, depth, shared))
+def tiles_for_zoom(features: DataFrame, z: int, cfg: TilingConfig,
+                   shared=None) -> DataFrame:
+    """Build all tiles at zoom z: the fused build over ``[z, z]``."""
+    return tiles_fused(features, cfg, shared=shared, z_lo=z, z_hi=z)
 
 
-def _hot_tiles(hot_df: DataFrame, z: int, cfg: TilingConfig, depth: int,
-               shared=None) -> DataFrame:
+def _hot_tiles(hot_df: DataFrame, z: int, cfg: TilingConfig, max_count: int,
+               split_budget: int, shared=None) -> DataFrame:
     """Hierarchical split-and-merge for oversized tiles: sub-partition by
     child quadkey (the next ``depth`` zoom levels of the feature's
     representative point — spatially coherent split, SURVEY §4), prepare
     each sub-partition independently, merge per tile for the sequential
-    stages."""
+    stages.  ``depth`` is the number of child-quad levels that leaves
+    each sub-partition of the largest hot tile (``max_count`` rows) with
+    at most ``split_budget`` features."""
+    depth = 1
+    while (max_count >> (2 * depth)) > split_budget and depth < 8:
+        depth += 1
     shift = WORLD_BITS - z
     sub_shift = shift - depth
     salt = (
@@ -3816,16 +3581,29 @@ def tiles_fused(
     hot_by_zoom: dict[int, dict[tuple[int, int], int]] | None = None,
     split_budget: int = 200_000,
     shared=None,
+    z_lo: int | None = None,
+    z_hi: int | None = None,
+    leaves: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """The whole pyramid in ONE shuffle: per-zoom tile assignments union
-    into a single relation keyed (zz, tx, ty); the streaming kernel
-    handles every zoom's groups in the same pass.  Collapses the
-    per-zoom job fan (assign/shuffle/kernel × zooms) that otherwise
-    dominates wall-clock with fixed scheduling cost — on a real cluster
-    this is the difference between 15 barriers and 1.
+    """The tiles of zooms ``[z_lo, z_hi]`` (default: the whole pyramid)
+    in ONE shuffle: the per-zoom tile assignments union into a single
+    relation keyed (zz, tx, ty); the streaming kernel handles every
+    zoom's groups in the same pass.  Collapses the per-zoom job fan
+    (assign/shuffle/kernel × zooms) that otherwise dominates wall-clock
+    with fixed scheduling cost — on a real cluster this is the
+    difference between 15 barriers and 1.  A per-zoom build is this over
+    ``[z, z]``.
 
-    Hot tiles (``hot_by_zoom``) still take the per-zoom split-and-merge
-    path and union in at the end."""
+    Hot tiles (``hot_by_zoom``: zoom → tile → feature count, tiles above
+    ``split_budget``) take the split-and-merge path and union in at the
+    end.  ``leaves`` is a precomputed ``vardepth.leaf_plan`` for -at
+    (computed here when absent), so per-zoom builds plan it once."""
+    lo = cfg.minzoom if z_lo is None else z_lo
+    hi = cfg.maxzoom if z_hi is None else z_hi
+    if not cfg.minzoom <= lo <= hi <= cfg.maxzoom:
+        raise ValueError(
+            f"zoom range [{lo}, {hi}] is outside [{cfg.minzoom}, {cfg.maxzoom}]"
+        )
     if shared is None and cfg.preserve_shared_nodes:
         # direct callers get the -pn node set computed here; the pyramid
         # entry passes its cached copy
@@ -3833,17 +3611,17 @@ def tiles_fused(
 
         shared = _shared_arrays(features, cfg)
     featuresT = with_dateline_twins(features, cfg)
-    R = _subtree_root_zoom(cfg)
+    R = _subtree_root_zoom(cfg, lo, hi)
     sub_rows = None
     if R is None:
-        assigned = assign_tiles_all(featuresT, cfg)
+        assigned = assign_tiles_all(featuresT, cfg, z_lo=lo, z_hi=hi)
     else:
         # subtree fan-out: zooms < R ride per-(zoom, tile) rows; zooms
         # R..maxzoom ship once per (feature, zoom-R root) and expand in
         # the kernel.  Hot deep tiles (and their whole subtree) fall back
         # to per-(zoom, tile) rows so the split-and-merge path still
         # bounds task latency.
-        assigned = assign_tiles_all(featuresT, cfg, z_hi=R - 1)
+        assigned = assign_tiles_all(featuresT, cfg, z_lo=lo, z_hi=R - 1)
         hot_roots: set[int] = set()
         for z, tiles_ in (hot_by_zoom or {}).items():
             if z >= R:
@@ -3867,18 +3645,15 @@ def tiles_fused(
         # assignment BEFORE the pyramid shuffle (vardepth.py)
         from . import vardepth
 
-        leaf_tiles, leaf_keys = vardepth.leaf_plan(featuresT, cfg, shared)
+        leaf_tiles, leaf_keys = leaves or vardepth.leaf_plan(featuresT, cfg, shared)
         assigned = vardepth.prune_assignment(assigned, leaf_keys, cfg)
+        leaf_tiles = leaf_tiles.filter(F.col("z").between(lo, hi))
     hot_parts = []
     hot_conds = []
     for z, tiles_ in (hot_by_zoom or {}).items():
         hot = {t: c for t, c in tiles_.items() if c > split_budget}
         if not hot:
             continue
-        max_count = max(hot.values())
-        depth = 1
-        while (max_count >> (2 * depth)) > split_budget and depth < 8:
-            depth += 1
         # per-zoom key (tx<<z)|ty fits signed int64 at every supported
         # zoom (tx,ty < 2^z, z <= 31 ⇒ key < 2^62); a fixed 24-bit ty
         # lane would collide tiles at z >= 25
@@ -3888,18 +3663,19 @@ def tiles_fused(
         )
         cond = (F.col("zz") == F.lit(z)) & key_col.isin(keys)
         hot_conds.append(cond)
-        hot_parts.append(
-            _hot_tiles(assigned.filter(cond), z, cfg, depth, shared)
-        )
+        hot_parts.append(_hot_tiles(
+            assigned.filter(cond), z, cfg, max(hot.values()), split_budget, shared
+        ))
     cold = assigned
     if hot_conds:
         any_hot = hot_conds[0]
         for c in hot_conds[1:]:
             any_hot = any_hot | c
         cold = assigned.filter(~any_hot)
-    # key space across the fused pyramid = Σ 4^z — cap like the
-    # single-zoom path so shallow builds don't schedule empty tasks
-    key_space = sum(4**z for z in range(min(cfg.maxzoom, 14) + 1))
+    # the build's key space is Σ 4^z over its zooms: more partitions
+    # than keys are guaranteed-empty tasks (~4 ms of pure scheduling
+    # each; a z4 build would schedule ~750 of them per stage)
+    key_space = sum(4**z for z in range(lo, hi + 1))
     # mapInPandas cannot column-prune: select exactly the kernel's
     # columns BEFORE the shuffle so url/gap/curve_rank etc. (roughly
     # half the row bytes) never ride it
