@@ -7,7 +7,8 @@ for two cluster sizes).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR        parquet dir for the oracle queries (sf0.1)
-  SPARK_GRAFT_CPUS          cores for the main run (default 32)
+  SPARK_GRAFT_CPUS          cores for the main run (default: the cores
+                            this process may use)
   SPARK_GRAFT_BENCH_PAGES   corpus size for pipeline+pyramid (default 100000)
   SPARK_GRAFT_BENCH_MAXZOOM pyramid depth for the full-corpus shallow run
                             (default 8; the z0-z14 target-metric build
@@ -53,7 +54,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _fresh_spark(cpus: int):

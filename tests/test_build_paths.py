@@ -164,3 +164,54 @@ def test_zoom_outside_range_raises(small_features):
     for z in (0, MAXZOOM + 1):
         with pytest.raises(ValueError):
             tilemod.tiles_for_zoom(small_features, z, cfg)
+
+
+@pytest.mark.parametrize("name", ["default", "ab", "at"])
+def test_tiles_independent_of_partition_count(spark, small_features, monkeypatch, name):
+    """The tile-kernel shuffles give the same tiles (bytes, ``n_in`` and
+    ``n_out``) at the partition helper's floor (``cores``) and at its cap
+    (24 x cores or the key space): the pyramid shuffle of ``tiles_fused``
+    under the default config and -ab, and the leaf-confirm probe of an -at
+    build."""
+    from tippecanoe_spark import tile as tilemod
+    from tippecanoe_spark.minzoom import stamp_minzoom
+
+    # z0-z3 caps the pyramid shuffle at its key space (85 tiles), ~10x the
+    # floor.  -at needs z5 for more leaf probes than cores (69 on this
+    # corpus); its pyramid shuffle gets no estimate and stays at the
+    # floor, since at z5 the cap alone would cost ~20 s of 192 tasks.
+    overrides, maxzoom, est_rows = {
+        "default": ({}, 3, 10**6),
+        "ab": (MATRIX["ab"], 3, 10**6),
+        "at": ({"variable_depth_pyramid": True}, MAXZOOM, None),
+    }[name]
+    cfg = TilingConfig(maxzoom=maxzoom, **overrides)
+    cores = spark.sparkContext.defaultParallelism
+    helper = tilemod._tile_partitions
+    stamped = stamp_minzoom(small_features, cfg).persist()
+
+    def build(rows_per_task: int):
+        counts: list[int] = []
+
+        def spy(*a, **kw):
+            counts.append(helper(*a, **kw))
+            return counts[-1]
+
+        monkeypatch.setattr(tilemod, "ROWS_PER_TASK", rows_per_task)
+        monkeypatch.setattr(tilemod, "_tile_partitions", spy)
+        rows = tilemod.tiles_fused(stamped, cfg, est_rows=est_rows).collect()
+        return _collect(rows), counts
+
+    try:
+        few, n_few = build(10**18)
+        many, n_many = build(1)
+    finally:
+        stamped.unpersist()
+    # one helper call per shuffle: under -at the confirm probe (one round
+    # on this corpus), then the pyramid shuffle
+    if name == "at":
+        assert n_few == [cores, cores]
+        assert n_many[0] > cores and n_many[1] == cores
+    else:
+        assert n_few == [cores] and n_many == [min(24 * cores, 85)]
+    assert few and few == many

@@ -477,7 +477,7 @@ def spatial_dedup(
     )
     tagged = features.withColumn("_cell", cell)
 
-    def per_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["index", "seq"], kind="mergesort")
         keep = greedy_radius_dedup(
             pdf[x_col].to_numpy(np.float64),
@@ -777,7 +777,7 @@ def tile_join(
         unioned = unioned.unionByName(t)
     layer_ops = bool(keep_layers or remove_layers or rename_layers)
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         z, x, y = key
         if len(pdf) == 1 and not layer_ops:
             return pdf

@@ -65,20 +65,11 @@ def _shared_arrays(stamped: DataFrame, cfg: TilingConfig):
     return _SHARED_CACHE[key]
 
 
-def survivors_per_zoom(stamped: DataFrame, cfg: TilingConfig) -> dict[int, int]:
-    """zoom → number of features with feature_minzoom <= z (one job)."""
-    rows = stamped.groupBy("feature_minzoom").count().collect()
-    by_mz = {r["feature_minzoom"]: r["count"] for r in rows}
-    out = {}
-    run = 0
-    for z in range(0, cfg.maxzoom + 1):
-        run += by_mz.get(z, 0)
-        out[z] = run
-    return out
-
-
 def coarse_hot_tiles(
-    stamped: DataFrame, cfg: TilingConfig, base_z: int = 8
+    stamped: DataFrame,
+    cfg: TilingConfig,
+    base_z: int = 8,
+    survivors: dict[int, int] | None = None,
 ) -> dict[int, dict[tuple[int, int], int]]:
     """Hot-tile detection for EVERY zoom from ONE cheap aggregation:
     a (base-zoom tile of the representative point × feature_minzoom)
@@ -90,7 +81,11 @@ def coarse_hot_tiles(
       count is bounded by that cell's; cells under budget prove no hot
       descendants.  (Long-line fan-out is not counted — lines contribute
       only at their representative point; the budget escalation in the
-      tile kernel still bounds those tiles' outputs.)"""
+      tile kernel still bounds those tiles' outputs.)
+
+    ``survivors``, when given, is filled from the same histogram with
+    zoom → number of features with feature_minzoom <= z, for every zoom
+    of ``cfg`` (the fused build sizes its tile shuffle from it)."""
     base_z = min(base_z, cfg.maxzoom)
     shift = 32 - base_z
     rows = (
@@ -102,6 +97,13 @@ def coarse_hot_tiles(
         .count()
         .collect()
     )
+    if survivors is not None:
+        by_mz: dict[int, int] = {}
+        for r in rows:
+            mz = r["feature_minzoom"]
+            by_mz[mz] = by_mz.get(mz, 0) + r["count"]
+        for z in range(cfg.minzoom, cfg.maxzoom + 1):
+            survivors[z] = sum(c for mz, c in by_mz.items() if mz <= z)
     budget = cfg.max_features_per_task
     out: dict[int, dict[tuple[int, int], int]] = {}
     hot_base: dict[tuple[int, int], int] = {}
@@ -203,11 +205,13 @@ def _build_fused(
     out_dir: str | None,
 ) -> list[dict]:
     t0 = time.time()
-    hot = coarse_hot_tiles(stamped, cfg)
+    survivors: dict[int, int] = {}
+    hot = coarse_hot_tiles(stamped, cfg, survivors=survivors)
     shared = _shared_arrays(stamped, cfg)
     tiles = tilemod.tiles_fused(
         stamped, cfg, hot_by_zoom=hot,
         split_budget=cfg.max_features_per_task, shared=shared,
+        est_rows=sum(survivors.values()),
     )
     if out_dir:
         tiles.write.mode("overwrite").partitionBy("z").parquet(out_dir)
@@ -270,7 +274,7 @@ def build_zoom(
         stamped, cfg, hot_by_zoom={z: hot},
         split_budget=cfg.max_features_per_task,
         shared=_shared_arrays(stamped, cfg),
-        z_lo=z, z_hi=z, leaves=leaves,
+        z_lo=z, z_hi=z, leaves=leaves, est_rows=n_surviving,
     )
     if out_dir:
         zdir = os.path.join(out_dir, f"z={z}")

@@ -1,8 +1,9 @@
 """SparkSession factory with the settings this engine assumes.
 
-Local testing runs ``local[N]``; at cluster scale the same builder options
-apply (AQE on, Arrow on, sane shuffle partitioning).  Nothing here is
-environment-specific beyond the master default.
+Local runs default to ``local[<cores this process may use>]`` and a driver
+heap of half the machine's memory; ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEM`` override them.  At cluster scale the same builder
+options apply (AQE on, Arrow on, sane shuffle partitioning).
 """
 
 from __future__ import annotations
@@ -12,13 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, at least 1 GiB: in local mode the
+    executors run inside the driver JVM, and the machine may be shared."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(ram // 2 >> 30, 1)}g"
+
+
 def get_spark(
     app: str = "tippecanoe_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     b = (
@@ -33,8 +41,10 @@ def get_spark(
         # Arrow is the transport for every pandas UDF in this engine.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # generous driver memory for local[32] testing
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
     )

@@ -123,22 +123,36 @@ def _tile_schema(cfg) -> T.StructType:
 _FAST_MAX = 256
 
 
-# tile-shuffle partitions per core (see _tile_partitions)
-_TILE_PART_MULT = 24
+# Estimated survivor rows per tile-kernel task (see _tile_partitions).
+# Calibrated on the one measurement where many partitions paid off:
+# 100k pages, z0-z8, 32 cores (BASELINE.md, r5), where 24x cores beat 6x
+# (77 s vs 102 s).  The estimate is the sum over the build's zooms of
+# the features with feature_minzoom <= z, about 3.1 x the feature count
+# on this corpus (measured at 1k and 20k pages: 7,360 rows for 2,361
+# features, 154k for 49.6k).  100k pages stamp 236k-248k features, so
+# 730k-770k rows: 730-768 tasks, within 5% of the 24 x 32 = 768 cap.
+# The 1k-page benchmark corpus gets 8 tasks, 2 x cores on 4 cores.
+ROWS_PER_TASK = 1_000
+
+# task-count ceiling per core: the straggler control of a hot-spot-heavy
+# corpus (city hot spots put ~20% of rows in a handful of tiles)
+_MAX_TASKS_PER_CORE = 24
 
 
-def _tile_partitions(df: DataFrame) -> int:
-    """Partition count for the tile shuffle: well above core count so the
-    hash of (z,tx,ty) balances despite skewed tile sizes (city hot spots
-    put ~20% of rows in a handful of tiles; at cores==partitions one
-    straggler partition gates the stage).  24× cores keeps the straggler
-    tail under ~2 task-lengths while per-task Arrow setup stays <2%."""
-    spark = df.sparkSession
-    n = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        spark.sparkContext.defaultParallelism * _TILE_PART_MULT,
-    )
-    return max(n, 1)
+def _tile_partitions(spark, key_space: int, est_rows: int | None = None) -> int:
+    """Partition count for a tile-kernel shuffle, sized to its rows:
+    ``ceil(est_rows / ROWS_PER_TASK)``, at least ``cores`` and at most
+    ``24 x cores`` and ``key_space`` (the number of distinct (z, tx, ty)
+    keys the shuffle can hold: more partitions than keys are empty
+    tasks).  Each Python task costs ~0.3 s of fixed Arrow/worker set-up
+    whatever its size, so a small build wants few tasks; a large skewed
+    one wants many, so the hash of (z, tx, ty) spreads the hot tiles and
+    no one straggler gates the stage.  ``est_rows`` is the caller's
+    survivor-row estimate; unknown (``None``) means the floor."""
+    cores = spark.sparkContext.defaultParallelism
+    cap = min(_MAX_TASKS_PER_CORE * cores, key_space)
+    want = -(-est_rows // ROWS_PER_TASK) if est_rows else 0
+    return max(min(max(want, cores), cap), 1)
 
 
 def buffer_world(z: int, cfg: TilingConfig) -> int:
@@ -3584,6 +3598,7 @@ def tiles_fused(
     z_lo: int | None = None,
     z_hi: int | None = None,
     leaves: tuple[DataFrame, DataFrame] | None = None,
+    est_rows: int | None = None,
 ) -> DataFrame:
     """The tiles of zooms ``[z_lo, z_hi]`` (default: the whole pyramid)
     in ONE shuffle: the per-zoom tile assignments union into a single
@@ -3597,7 +3612,9 @@ def tiles_fused(
     Hot tiles (``hot_by_zoom``: zoom → tile → feature count, tiles above
     ``split_budget``) take the split-and-merge path and union in at the
     end.  ``leaves`` is a precomputed ``vardepth.leaf_plan`` for -at
-    (computed here when absent), so per-zoom builds plan it once."""
+    (computed here when absent), so per-zoom builds plan it once.
+    ``est_rows`` is the caller's survivor-row estimate for the range,
+    which sizes the tile shuffle (:func:`_tile_partitions`)."""
     lo = cfg.minzoom if z_lo is None else z_lo
     hi = cfg.maxzoom if z_hi is None else z_hi
     if not cfg.minzoom <= lo <= hi <= cfg.maxzoom:
@@ -3687,7 +3704,7 @@ def tiles_fused(
     if sub_rows is not None:
         shuffle_in = shuffle_in.unionByName(sub_rows.select(*kcols))
     shuffled = shuffle_in.repartition(
-        min(_tile_partitions(cold), key_space),
+        _tile_partitions(cold.sparkSession, key_space, est_rows),
         F.col("zz"), F.col("tx"), F.col("ty"),
     ).sortWithinPartitions("zz", "tx", "ty", "index", "seq")
     out = shuffled.mapInPandas(make_stream_kernel(cfg, shared), schema=_tile_schema(cfg))

@@ -75,9 +75,10 @@ def _pack_key(z, x, y):
 
 def candidate_keys(featuresT: DataFrame, cfg: TilingConfig) -> DataFrame:
     """Phase 1: (zz, tx, ty) tiles that pass the relational leaf
-    estimate.  ``featuresT`` is the dateline-twinned feature relation the
-    assignment itself uses, so buffered twin copies participate exactly
-    like the reference's duplicated stream features.
+    estimate, with ``n``, the tile's assignment rows.  ``featuresT`` is
+    the dateline-twinned feature relation the assignment itself uses, so
+    buffered twin copies participate exactly like the reference's
+    duplicated stream features.
 
     Size side: aggregate the EXACT walked tile assignment clamped to the
     leaf zooms (one extra shallow assignment pass) — wide lines carry
@@ -98,7 +99,7 @@ def candidate_keys(featuresT: DataFrame, cfg: TilingConfig) -> DataFrame:
     zhi = max_leaf_zoom(cfg)
     if zhi < cfg.minzoom or cfg.max_tile_size <= 0:
         return featuresT.sparkSession.createDataFrame(
-            [], "zz int, tx int, ty int"
+            [], "zz int, tx int, ty int, n long"
         )
     shallow = tilemod.assign_tiles_all(featuresT, _replace(cfg, maxzoom=zhi))
     # reference-equivalent stream complexity: the reference's
@@ -127,7 +128,7 @@ def candidate_keys(featuresT: DataFrame, cfg: TilingConfig) -> DataFrame:
     cond = 0.6693 * F.col("stream_bytes") - 33600.0 < 0.9 * cfg.max_tile_size
     if max_feat:
         cond = cond & (F.col("n") <= max_feat)
-    cand = tiles.filter(cond).select("zz", "tx", "ty")
+    cand = tiles.filter(cond).select("zz", "tx", "ty", "n")
 
     # ---- disqualifiers ----------------------------------------------
     has_fmax = "feature_maxzoom" in featuresT.columns
@@ -227,6 +228,13 @@ def candidate_keys(featuresT: DataFrame, cfg: TilingConfig) -> DataFrame:
     return cand.join(vetoed, ["zz", "tx", "ty"], "left_anti")
 
 
+def _count_rows(probe: DataFrame) -> tuple[int, int]:
+    """(tiles, assignment rows) of a candidate-tile relation, in one job:
+    the rows size the confirm shuffle."""
+    r = probe.agg(F.count(F.lit(1)), F.sum("n")).first()
+    return r[0], r[1] or 0
+
+
 def _parent_key(z, x, y):
     return _pack_key(z - 1, F.shiftright(x, 1), F.shiftright(y, 1))
 
@@ -287,7 +295,7 @@ def leaf_plan(
         empty_keys = spark.createDataFrame([], "zz int, tx int, ty int")
         return empty_tiles, empty_keys
 
-    def _confirm(probe, n_probe):
+    def _confirm(probe, n_probe, probe_rows):
         """Strict full-detail encode of the probe tiles (TILE_SCHEMA_LEAF
         rows, leaf_ok marking the verdict), lineage-truncated: probe keys
         are tiny but sit on the whole candidate DAG, and downstream
@@ -303,7 +311,7 @@ def leaf_plan(
             c for c in tilemod._STREAM_COLS + ("zz",) if c in cand_assign.columns
         ]
         shuffled = cand_assign.select(*kcols).repartition(
-            min(tilemod._tile_partitions(cand_assign), n_probe), "zz", "tx", "ty"
+            tilemod._tile_partitions(spark, n_probe, probe_rows), "zz", "tx", "ty"
         ).sortWithinPartitions("zz", "tx", "ty", "index", "seq")
         return shuffled.mapInPandas(
             tilemod.make_stream_kernel(ccfg, shared),
@@ -327,11 +335,11 @@ def leaf_plan(
         _parent_key(F.col("zz"), F.col("tx"), F.col("ty")) == candk["k"],
         "left_anti",
     ).localCheckpoint()
-    n_top = top.count()
+    n_top, rows_top = _count_rows(top)
     if n_top == 0:
         cand.unpersist()
         return _empty()
-    conf1 = _confirm(top, n_top)
+    conf1 = _confirm(top, n_top, rows_top)
     leaf1 = conf1.filter(F.col("leaf_ok"))
     failedk = top.join(
         conf1.filter(F.col("leaf_ok")).select(
@@ -348,11 +356,11 @@ def leaf_plan(
         _parent_key(F.col("zz"), F.col("tx"), F.col("ty")) == failedk["k"],
         "left_semi",
     ).localCheckpoint()
-    n_tier2 = tier2.count()
+    n_tier2, rows_tier2 = _count_rows(tier2)
     cand.unpersist()
     leaves = leaf1
     if n_tier2:
-        leaf2 = _confirm(tier2, n_tier2).filter(F.col("leaf_ok"))
+        leaf2 = _confirm(tier2, n_tier2, rows_tier2).filter(F.col("leaf_ok"))
         leaves = leaf1.unionByName(leaf2)
     leaves = leaves.select(*tilemod._TILE_COLS).localCheckpoint()
 
