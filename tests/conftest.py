@@ -12,11 +12,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from tippecanoe_spark.session import get_spark
 
-    # the driver heap grows toward its cap over a long session: keep the
-    # cap at half the machine's memory instead of get_spark's 24g default
-    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    os.environ.setdefault("SPARK_DRIVER_MEM", f"{max(ram // 2 >> 30, 2)}g")
-
     s = get_spark(app="tests", master="local[8]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -1,12 +1,13 @@
-"""One tile-build path: pinned per-zoom digests and the fused == per-zoom
-invariant.
+"""One tile-build path: pinned per-zoom digests, fused == per-zoom, and
+zoom-granular resume.
 
-``build_pyramid(fused=False)`` (the ``--checkpoint-dir`` path: one job and
-one checkpoint per zoom) and ``tiles_fused`` (the whole range in one
-shuffle, with the subtree fan-out at the deep zooms) must emit the same
-tiles.  The per-zoom digests were generated before the per-zoom build was
-rewritten as the fused build over ``[z, z]``; change one only together
-with a CHANGES.md entry naming the semantic change."""
+The flat per-zoom build (``tiles_for_zoom`` over each zoom: per-(zoom,
+tile) assignment rows only) and the checkpointed pyramid
+(``build_pyramid(out_dir=...)``: one ``tiles_fused`` job over every zoom,
+with the subtree fan-out at the deep zooms) must emit the same tiles,
+``n_in`` and ``n_out`` included.  The digests were generated when the
+per-zoom path was a job per zoom; change one only together with a
+CHANGES.md entry naming the semantic change."""
 
 from __future__ import annotations
 
@@ -74,27 +75,54 @@ def small_features(spark):
 
 
 @pytest.fixture(scope="module")
-def per_zoom(spark, small_features, tmp_path_factory):
-    """name → tiles of the per-zoom build, read back from its per-zoom
-    parquet checkpoints; built once per name."""
+def per_zoom(spark, small_features):
+    """name → tiles of the flat per-zoom build: ``tiles_for_zoom`` over
+    each zoom; built once per name."""
     from tippecanoe_spark import pyramid
+    from tippecanoe_spark import tile as tilemod
+    from tippecanoe_spark.minzoom import stamp_minzoom
 
     built: dict[str, dict] = {}
 
     def get(name: str) -> dict:
         if name not in built:
-            out = str(tmp_path_factory.mktemp(f"perzoom_{name}"))
-            manifests = pyramid.build_pyramid(
-                spark, small_features, _cfg(name), out_dir=out, fused=False
-            )
-            tiles: dict = {}
-            for m in manifests:
-                if m["n_tiles"]:
+            cfg = _cfg(name)
+            stamped = stamp_minzoom(small_features, cfg).persist()
+            try:
+                shared = pyramid._shared_arrays(stamped, cfg)
+                tiles: dict = {}
+                for z in range(MAXZOOM + 1):
                     tiles.update(_collect(
-                        spark.read.parquet(f"{out}/z={m['z']}").collect()
+                        tilemod.tiles_for_zoom(stamped, z, cfg, shared=shared).collect()
                     ))
-            assert sum(m["n_tiles"] for m in manifests) == len(tiles)
+            finally:
+                stamped.unpersist()
             built[name] = tiles
+        return built[name]
+
+    return get
+
+
+@pytest.fixture(scope="module")
+def checkpointed(spark, small_features, tmp_path_factory):
+    """name → (checkpoint dir, tiles read back from it) of the
+    checkpointed pyramid; built once per name."""
+    from tippecanoe_spark import pyramid
+
+    built: dict[str, tuple] = {}
+
+    def get(name: str) -> tuple:
+        if name not in built:
+            out = str(tmp_path_factory.mktemp(f"ckpt_{name}"))
+            manifests = pyramid.build_pyramid(spark, small_features, _cfg(name), out_dir=out)
+            tiles = _collect(spark.read.parquet(out).collect())
+            assert [m["z"] for m in manifests] == list(range(MAXZOOM + 1))
+            for m in manifests:
+                mine = [v for k, v in tiles.items() if k[0] == m["z"]]
+                assert m["n_tiles"] == len(mine)
+                assert m["n_features_in"] == sum(v[0] for v in mine)
+                assert m["n_features_out"] == sum(v[1] for v in mine)
+            built[name] = (out, tiles)
         return built[name]
 
     return get
@@ -106,21 +134,63 @@ def test_per_zoom_digest_pinned(per_zoom, name):
 
 
 @pytest.mark.parametrize("name", sorted(MATRIX))
-def test_fused_equals_per_zoom(spark, small_features, per_zoom, name):
-    """Tile bytes and ``n_out`` agree.  ``n_in`` is left out: the fused
-    subtree groups count the forced-candidate superset they carry at zooms
-    R..basezoom-1, the per-zoom groups only the rows the flat assignment
-    admits."""
+def test_fused_equals_per_zoom(per_zoom, checkpointed, name):
+    """The checkpointed build equals the flat per-zoom build in tile
+    bytes, ``n_in`` and ``n_out`` (so it holds the pinned digest too).
+    At maxzoom 5 its one build roots the subtree fan-out at z2, so z2-z5
+    come from the in-kernel expansion (except under ``M=3``)."""
     from tippecanoe_spark import tile as tilemod
-    from tippecanoe_spark.minzoom import stamp_minzoom
 
-    cfg = _cfg(name)
     assert tilemod._subtree_root_zoom(TilingConfig(maxzoom=MAXZOOM), 0, MAXZOOM) == 2
-    fused = _collect(tilemod.tiles_fused(stamp_minzoom(small_features, cfg), cfg).collect())
+    _, fused = checkpointed(name)
     want = per_zoom(name)
     assert set(fused) == set(want)
-    diff = [k for k in want if fused[k][1:] != want[k][1:]]
+    diff = [k for k in want if fused[k] != want[k]]
     assert not diff, f"{len(diff)} of {len(want)} tiles differ, e.g. {sorted(diff)[:3]}"
+    assert _digest(fused) == PINNED[name]
+
+
+def test_resume_after_kill(spark, small_features, checkpointed, tmp_path, monkeypatch):
+    """A build killed after committing z0-z2: z3-z5 have no manifest,
+    ``z=5/`` is gone and ``z=3/``, ``z=4/`` are stale leftovers (``z=4/``
+    holds a foreign file).  The re-run rebuilds exactly z3-z5 in one
+    build — over the flat path, since the subtree root z2 is outside its
+    range — leaves the z0-z2 partitions untouched and equals the clean
+    build."""
+    import os
+    import shutil
+
+    from tippecanoe_spark import pyramid
+    from tippecanoe_spark import tile as tilemod
+
+    clean_dir, clean = checkpointed("default")
+    out = str(tmp_path / "ckpt")
+    shutil.copytree(clean_dir, out)
+    for z in (3, 4, 5):
+        os.remove(pyramid.zoom_manifest_path(out, z))
+    z5 = pyramid.zoom_dir(out, 5)
+    part = next(f for f in sorted(os.listdir(z5)) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(z5, part), os.path.join(pyramid.zoom_dir(out, 4), "part-stale.parquet"))
+    shutil.rmtree(z5)
+
+    def mtimes(z: int) -> dict:
+        d = pyramid.zoom_dir(out, z)
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    kept = {z: mtimes(z) for z in (0, 1, 2)}
+    ranges = []
+    fused = tilemod.tiles_fused
+
+    def spy(*a, **kw):
+        ranges.append((kw["z_lo"], kw["z_hi"]))
+        return fused(*a, **kw)
+
+    monkeypatch.setattr(tilemod, "tiles_fused", spy)
+    manifests = pyramid.build_pyramid(spark, small_features, _cfg("default"), out_dir=out)
+    assert ranges == [(3, 5)]
+    assert {z: mtimes(z) for z in (0, 1, 2)} == kept
+    assert _collect(spark.read.parquet(out).collect()) == clean
+    assert sum(m["n_tiles"] for m in manifests) == len(clean)
 
 
 def test_tiles_for_zoom_computes_shared_nodes(spark):

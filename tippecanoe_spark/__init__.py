@@ -16,7 +16,7 @@ Subpackages
 - ``geom``      clip / simplify / polygon kernels (numpy, §2.4)
 - ``mvt``       Mapbox Vector Tile protobuf encoder/decoder (E1-E3)
 - ``tile``      per-tile applyInPandas kernel (write_tile analog)
-- ``pyramid``   per-zoom driver loop with checkpoints + skew split (§3.1)
+- ``pyramid``   one-build driver, zoom-partitioned checkpoints + skew split (§3.1)
 - ``joins``     PIP / kNN spatial joins, tile-join, CSV attribute join (§2.6)
 - ``sinks``     tiles table, mbtiles/dirtiles export (S7-S9)
 """

@@ -90,7 +90,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--visvalingam", action="store_true")
     p.add_argument("--hilbert", "-ah", dest="hilbert", action="store_true")
     p.add_argument("--checkpoint-dir", default=None,
-                   help="per-zoom checkpoint dir (resumable)")
+                   help="checkpoint dir: one parquet partition and manifest "
+                        "per zoom; a re-run rebuilds only the zooms "
+                        "without a manifest")
     p.add_argument("--cpus", type=int, default=None)
     return p
 
@@ -268,11 +270,23 @@ def main(argv=None) -> int:
 
     ckpt = args.checkpoint_dir or tempfile.mkdtemp(prefix="tiles_")
     manifests = pyramid.build_pyramid(spark, feats, cfg, out_dir=ckpt)
-    tiles_df = spark.read.parquet(*[
-        os.path.join(ckpt, f"z={z}") for z in range(cfg.minzoom, cfg.maxzoom + 1)
-    ])
+    # zooms without tiles have no partition; basePath keeps z a column
+    parts = [
+        pyramid.zoom_dir(ckpt, z) for z in range(cfg.minzoom, cfg.maxzoom + 1)
+        if os.path.isdir(pyramid.zoom_dir(ckpt, z))
+    ]
+    if parts:
+        tiles_df = spark.read.option("basePath", ckpt).parquet(*parts)
+    else:
+        from .tile import TILE_SCHEMA
+
+        tiles_df = spark.createDataFrame([], TILE_SCHEMA)
     name = args.name or os.path.splitext(os.path.basename(args.output.rstrip("/")))[0]
-    bounds = sinks.bounds_from_features(feats)
+    # the build's histogram pass records the input bounds in every
+    # manifest; checkpoints written without them need the input scan
+    bounds = next(
+        (tuple(m["bounds"]) for m in manifests if "bounds" in m), None
+    ) or sinks.bounds_from_features(feats)
     # streaming export: one pass over the tiles relation, no driver-side
     # collect of every blob (a z14 build can hold 10^6 tiles)
     if is_dir:

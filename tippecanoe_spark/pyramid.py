@@ -2,39 +2,41 @@
 
 Every tile is built by one code path, :func:`tile.tiles_fused`: tile
 assignment for a zoom range, ONE shuffle keyed (zz, tx, ty), and the
-streaming kernel.  The driver runs it in two modes:
+streaming kernel.  :func:`build_zoom` runs it once per build: a
+(base cell × feature_minzoom) histogram (hot tiles, survivor counts and
+the input bounds), an optional exact count under hot deep cells, the
+build itself, and one aggregation for the per-zoom manifests.  Per-job
+fixed cost is what kills scaling efficiency on short zooms, and on a
+real cluster each job is a full barrier, so the job count does not grow
+with the number of zooms.
 
-**Fused** (default, ``out_dir=None`` or ``fused=True``): the whole
-z-range in one build.  Job count for a z0-z14 build drops from ~45
-(3 per zoom) to 3 (survivor stats, optional hot stats, the build
-itself) — per-job fixed cost is what kills scaling efficiency on short
-zooms, and on a real cluster each job is a full barrier.  ``fused=True``
-with ``out_dir`` writes all zooms in one job (partitioned by z) and
-manifests afterwards — resumable at whole-build granularity only.
+**Checkpoints** (``out_dir`` set): the build is written
+``partitionBy("z")`` with dynamic partition overwrite, one parquet
+partition ``{out_dir}/z={z}/`` per zoom that has tiles, and one
+``_zoom_{z}.json`` manifest per zoom (input rows, tile count, byte
+totals, hot splits, input bounds).  A build drops its zooms' manifests
+before it writes and writes them after its partitions are committed, so
+a zoom with a manifest is complete.  A re-run keeps those zooms and
+rebuilds the hull ``[min(missing), max(missing)]`` of the rest in one
+build — resume is zoom-granular, the work is not split by zoom.
 
-**Per-zoom** (``out_dir`` set, ``fused=False``): the same build over
-``[z, z]``, one job per zoom, with a parquet partition
-``{out_dir}/z={z}/`` + ``_zoom_{z}.json`` manifest per zoom — the
-per-zoom checkpoint the north rule requires: a re-run skips zooms whose
-manifest exists (idempotent resume) and the manifest carries per-zoom
-lineage (input rows, tile count, byte totals, hot splits).
-
-Hot-tile detection in both modes starts from one cheap aggregation
-(survivors per zoom); only zooms whose survivor count exceeds the task
-budget pay the per-tile count shuffle (statistics-driven split planning
-— the reference's largest-shard-first scheduling, tile.cpp:3327-3378,
-turned into an explicit plan)."""
+Hot-tile detection starts from the one histogram; only descendants of
+hot base cells pay an exact per-tile count (statistics-driven split
+planning — the reference's largest-shard-first scheduling,
+tile.cpp:3327-3378, turned into an explicit plan)."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import minzoom as mzmod
+from . import sinks
 from . import tile as tilemod
 from .config import TilingConfig
 
@@ -43,26 +45,22 @@ def zoom_manifest_path(out_dir: str, z: int) -> str:
     return os.path.join(out_dir, f"_zoom_{z}.json")
 
 
-_SHARED_CACHE: dict[int, object] = {}
+def zoom_dir(out_dir: str, z: int) -> str:
+    return os.path.join(out_dir, f"z={z}")
 
 
 def _shared_arrays(stamped: DataFrame, cfg: TilingConfig):
-    """Shared-node world-coordinate arrays (T24) when -pn is on; cached
-    per stamped-DataFrame identity so per-zoom mode computes them once."""
+    """Shared-node world-coordinate arrays (T24) when -pn is on."""
     if not cfg.preserve_shared_nodes:
         return None
-    key = id(stamped)
-    if key not in _SHARED_CACHE:
-        import numpy as np
+    import numpy as np
 
-        from . import nodes
+    from . import nodes
 
-        pts = nodes.shared_nodes(stamped)
-        sx = np.array([p[0] for p in pts], dtype=np.int64)
-        sy = np.array([p[1] for p in pts], dtype=np.int64)
-        _SHARED_CACHE.clear()
-        _SHARED_CACHE[key] = (sx, sy)
-    return _SHARED_CACHE[key]
+    pts = nodes.shared_nodes(stamped)
+    sx = np.array([p[0] for p in pts], dtype=np.int64)
+    sy = np.array([p[1] for p in pts], dtype=np.int64)
+    return sx, sy
 
 
 def coarse_hot_tiles(
@@ -70,6 +68,7 @@ def coarse_hot_tiles(
     cfg: TilingConfig,
     base_z: int = 8,
     survivors: dict[int, int] | None = None,
+    bounds: list[int] | None = None,
 ) -> dict[int, dict[tuple[int, int], int]]:
     """Hot-tile detection for EVERY zoom from ONE cheap aggregation:
     a (base-zoom tile of the representative point × feature_minzoom)
@@ -85,7 +84,9 @@ def coarse_hot_tiles(
 
     ``survivors``, when given, is filled from the same histogram with
     zoom → number of features with feature_minzoom <= z, for every zoom
-    of ``cfg`` (the fused build sizes its tile shuffle from it)."""
+    of ``cfg`` (the build sizes its tile shuffle from it).  ``bounds``,
+    when given, is filled with the input's world bbox ``[minx, miny,
+    maxx, maxy]`` (left empty for an empty input)."""
     base_z = min(base_z, cfg.maxzoom)
     shift = 32 - base_z
     rows = (
@@ -94,9 +95,18 @@ def coarse_hot_tiles(
             F.shiftright("miny", shift).alias("cy"),
             "feature_minzoom",
         )
-        .count()
+        .agg(
+            F.count(F.lit(1)).alias("count"),
+            F.min("minx").alias("minx"), F.min("miny").alias("miny"),
+            F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy"),
+        )
         .collect()
     )
+    if bounds is not None and rows:
+        bounds[:] = [
+            min(r["minx"] for r in rows), min(r["miny"] for r in rows),
+            max(r["maxx"] for r in rows), max(r["maxy"] for r in rows),
+        ]
     if survivors is not None:
         by_mz: dict[int, int] = {}
         for r in rows:
@@ -166,72 +176,95 @@ def build_pyramid(
     resume: bool = True,
     fused: bool | None = None,
 ) -> list[dict]:
-    """Run the full z-range; returns per-zoom metrics manifests."""
+    """Build the full z-range; returns one manifest per zoom.
+
+    With ``out_dir`` (and ``resume``), zooms whose manifest exists are
+    kept and the rest are built by ONE :func:`build_zoom` over their
+    hull.  ``fused`` is accepted for older callers and selects nothing:
+    every build is one fused build."""
     cfg = cfg or TilingConfig()
-    if fused is None:
-        fused = out_dir is None
-    feats = mzmod.stamp_minzoom(features, cfg) if stamp else features
-    feats = feats.persist()
-    try:
-        if fused:
-            return _build_fused(spark, feats, cfg, out_dir)
-        leaves = None
-        if cfg.variable_depth_pyramid:
-            # -at: one leaf plan (vardepth.py) shared by every zoom
-            from . import vardepth
-
-            leaves = vardepth.leaf_plan(
-                tilemod.with_dateline_twins(feats, cfg), cfg,
-                _shared_arrays(feats, cfg),
-            )
-        manifests: list[dict] = []
-        for z in range(cfg.minzoom, cfg.maxzoom + 1):
-            if out_dir and resume:
-                mp = zoom_manifest_path(out_dir, z)
-                if os.path.exists(mp):
-                    with open(mp) as fh:
-                        manifests.append(json.load(fh))
-                    continue
-            manifests.append(build_zoom(spark, feats, z, cfg, out_dir, leaves))
-        return manifests
-    finally:
-        feats.unpersist()
+    zooms = range(cfg.minzoom, cfg.maxzoom + 1)
+    done: dict[int, dict] = {}
+    if out_dir and resume:
+        for z in zooms:
+            mp = zoom_manifest_path(out_dir, z)
+            if os.path.exists(mp):
+                with open(mp) as fh:
+                    done[z] = json.load(fh)
+    missing = [z for z in zooms if z not in done]
+    if missing:
+        feats = mzmod.stamp_minzoom(features, cfg) if stamp else features
+        feats = feats.persist()
+        try:
+            for m in build_zoom(spark, feats, cfg, out_dir, min(missing), max(missing)):
+                done[m["z"]] = m
+        finally:
+            feats.unpersist()
+    return [done[z] for z in zooms]
 
 
-def _build_fused(
+def build_zoom(
     spark: SparkSession,
     stamped: DataFrame,
     cfg: TilingConfig,
-    out_dir: str | None,
+    out_dir: str | None = None,
+    z_lo: int | None = None,
+    z_hi: int | None = None,
 ) -> list[dict]:
+    """The one build: zooms ``[z_lo, z_hi]`` (default: all of ``cfg``)
+    of ``stamped`` in one :func:`tile.tiles_fused` job; returns their
+    manifests.  With ``out_dir`` the tiles are written ``partitionBy("z")``
+    with dynamic partition overwrite, so other zooms' partitions survive,
+    and each zoom's manifest follows the commit."""
+    lo = cfg.minzoom if z_lo is None else z_lo
+    hi = cfg.maxzoom if z_hi is None else z_hi
+    zooms = range(lo, hi + 1)
     t0 = time.time()
+    if out_dir:
+        # no manifest may outlive its partition; a leftover partition of
+        # a zoom that now has no tiles would never be overwritten
+        for z in zooms:
+            if os.path.exists(zoom_manifest_path(out_dir, z)):
+                os.remove(zoom_manifest_path(out_dir, z))
+            shutil.rmtree(zoom_dir(out_dir, z), ignore_errors=True)
     survivors: dict[int, int] = {}
-    hot = coarse_hot_tiles(stamped, cfg, survivors=survivors)
-    shared = _shared_arrays(stamped, cfg)
+    world_bounds: list[int] = []
+    hot = coarse_hot_tiles(stamped, cfg, survivors=survivors, bounds=world_bounds)
+    hot = {z: hot[z] for z in zooms if z in hot}
     tiles = tilemod.tiles_fused(
         stamped, cfg, hot_by_zoom=hot,
-        split_budget=cfg.max_features_per_task, shared=shared,
-        est_rows=sum(survivors.values()),
+        split_budget=cfg.max_features_per_task,
+        shared=_shared_arrays(stamped, cfg),
+        z_lo=lo, z_hi=hi, est_rows=sum(survivors[z] for z in zooms),
     )
     if out_dir:
-        tiles.write.mode("overwrite").partitionBy("z").parquet(out_dir)
-        tiles = spark.read.parquet(out_dir)
-    per_zoom = (
-        tiles.groupBy("z")
-        .agg(
-            F.count(F.lit(1)).alias("n_tiles"),
-            F.sum("n_in").alias("n_in"),
-            F.sum("n_out").alias("n_out"),
-            F.sum("gz_bytes").alias("gz_bytes"),
-            F.max("gz_bytes").alias("max_gz"),
-            F.max("passes").alias("max_passes"),
+        (
+            tiles.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("z")
+            .parquet(out_dir)
         )
-        .collect()
-    )
+        parts = [zoom_dir(out_dir, z) for z in zooms if os.path.isdir(zoom_dir(out_dir, z))]
+        tiles = spark.read.option("basePath", out_dir).parquet(*parts) if parts else None
+    by_z = {}
+    if tiles is not None:
+        by_z = {
+            r["z"]: r
+            for r in tiles.groupBy("z")
+            .agg(
+                F.count(F.lit(1)).alias("n_tiles"),
+                F.sum("n_in").alias("n_in"),
+                F.sum("n_out").alias("n_out"),
+                F.sum("gz_bytes").alias("gz_bytes"),
+                F.max("gz_bytes").alias("max_gz"),
+                F.max("passes").alias("max_passes"),
+            )
+            .collect()
+        }
     wall = round(time.time() - t0, 3)
-    by_z = {r["z"]: r for r in per_zoom}
+    bounds = list(sinks.lonlat_bounds(*world_bounds))
     manifests = []
-    for z in range(cfg.minzoom, cfg.maxzoom + 1):
+    for z in zooms:
         r = by_z.get(z)
         manifests.append(
             {
@@ -243,66 +276,14 @@ def _build_fused(
                 "max_tile_gz_bytes": r["max_gz"] if r else 0,
                 "max_passes": r["max_passes"] if r else 0,
                 "hot_tiles_split": len(hot.get(z, {})),
-                "wall_sec": wall,  # fused: one wall for the whole build
+                "bounds": bounds,
+                "wall_sec": wall,  # one wall for the whole build
             }
         )
         if out_dir:
             with open(zoom_manifest_path(out_dir, z), "w") as fh:
                 json.dump(manifests[-1], fh)
     return manifests
-
-
-def build_zoom(
-    spark: SparkSession,
-    stamped: DataFrame,
-    z: int,
-    cfg: TilingConfig,
-    out_dir: str | None = None,
-    leaves: tuple[DataFrame, DataFrame] | None = None,
-) -> dict:
-    """One zoom of the per-zoom mode: the fused build over ``[z, z]``,
-    checkpointed to ``{out_dir}/z={z}/`` with its manifest.  ``leaves``
-    is the build's -at leaf plan."""
-    t0 = time.time()
-    # statistics pass gated by a cheap cached-scan count — if the zoom's
-    # survivors fit one task budget, no tile can be hot
-    hot: dict[tuple[int, int], int] = {}
-    n_surviving = stamped.filter(F.col("feature_minzoom") <= F.lit(z)).count()
-    if n_surviving > cfg.max_features_per_task:
-        hot = hot_tiles_by_zoom(stamped, cfg, [z]).get(z, {})
-    tiles = tilemod.tiles_fused(
-        stamped, cfg, hot_by_zoom={z: hot},
-        split_budget=cfg.max_features_per_task,
-        shared=_shared_arrays(stamped, cfg),
-        z_lo=z, z_hi=z, leaves=leaves, est_rows=n_surviving,
-    )
-    if out_dir:
-        zdir = os.path.join(out_dir, f"z={z}")
-        tiles.write.mode("overwrite").parquet(zdir)
-        tiles = spark.read.parquet(zdir)
-    stats = tiles.agg(
-        F.count(F.lit(1)).alias("n_tiles"),
-        F.coalesce(F.sum("n_in"), F.lit(0)).alias("n_in"),
-        F.coalesce(F.sum("n_out"), F.lit(0)).alias("n_out"),
-        F.coalesce(F.sum("gz_bytes"), F.lit(0)).alias("gz_bytes"),
-        F.coalesce(F.max("gz_bytes"), F.lit(0)).alias("max_gz"),
-        F.coalesce(F.max("passes"), F.lit(0)).alias("max_passes"),
-    ).collect()[0]
-    manifest = {
-        "z": z,
-        "n_tiles": stats["n_tiles"],
-        "n_features_in": stats["n_in"],
-        "n_features_out": stats["n_out"],
-        "gz_bytes": stats["gz_bytes"],
-        "max_tile_gz_bytes": stats["max_gz"],
-        "max_passes": stats["max_passes"],
-        "hot_tiles_split": len(hot),
-        "wall_sec": round(time.time() - t0, 3),
-    }
-    if out_dir:
-        with open(zoom_manifest_path(out_dir, z), "w") as fh:
-            json.dump(manifest, fh)
-    return manifest
 
 
 def build_zoom_global_retry(

@@ -143,11 +143,20 @@ def bounds_from_features(features: DataFrame) -> tuple[float, float, float, floa
         F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy"),
     ).collect()[0]
     if row["minx"] is None:
+        return lonlat_bounds()
+    return lonlat_bounds(row["minx"], row["miny"], row["maxx"], row["maxy"])
+
+
+def lonlat_bounds(*world: int) -> tuple[float, float, float, float]:
+    """(west, south, east, north) of a world bbox ``minx, miny, maxx,
+    maxy``; the whole Mercator world when none is given."""
+    if not world:
         return (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
     import numpy as np
 
-    lon0, lat1 = world_to_lonlat(np.array([row["minx"]]), np.array([row["miny"]]))
-    lon1, lat0 = world_to_lonlat(np.array([row["maxx"]]), np.array([row["maxy"]]))
+    minx, miny, maxx, maxy = world
+    lon0, lat1 = world_to_lonlat(np.array([minx]), np.array([miny]))
+    lon1, lat0 = world_to_lonlat(np.array([maxx]), np.array([maxy]))
     return (float(lon0[0]), float(lat0[0]), float(lon1[0]), float(lat1[0]))
 
 

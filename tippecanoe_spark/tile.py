@@ -21,8 +21,9 @@ handful of points):
   is fine.
 
 One driver, :func:`tiles_fused`, assigns, shuffles and kernels the tiles
-of any zoom range; a per-zoom build (:func:`tiles_for_zoom`, and the
-pyramid's checkpointed mode) is that build over ``[z, z]``.
+of any zoom range; :func:`tiles_for_zoom` is that build over ``[z, z]``,
+and the pyramid (checkpointed or not) runs it once over the zooms it
+builds.
 
 Stage semantics:
 
@@ -782,10 +783,9 @@ def _subtree_root_zoom(cfg: TilingConfig, lo: int, hi: int) -> int | None:
     lives in the Catalyst assignment), the vardepth planner (prunes
     per-(zz, tx, ty) keys with an anti-join), the zoom-global retry
     mode (single-zoom builds only), and point multipliers
-    (``retain_points_multiplier > 1``): the subtree admits every
-    non-explicit sub-minzoom row as a forced candidate, and the M > 1
-    count machine keeps any such row as a follower, where the M == 1
-    branch re-checks it exactly."""
+    (``retain_points_multiplier > 1``): their multiplier candidates
+    enter extra zooms early, and the in-kernel forced admissions
+    reproduce only the M == 1 relation."""
     if cfg.subtree_depth <= 0:
         return None
     if (
@@ -876,6 +876,16 @@ def _subtree_root_rows(
 # ---------------------------------------------------------------------------
 # scaling helpers
 # ---------------------------------------------------------------------------
+
+def _box_tiles(x0: np.ndarray, x1: np.ndarray, y0: np.ndarray, y1: np.ndarray):
+    """Every tile (tx, ty) of each inclusive box, with the box's
+    position: ``(tx, ty, box)``."""
+    wy = y1 - y0 + 1
+    cnt = (x1 - x0 + 1) * wy
+    box = np.repeat(np.arange(cnt.size), cnt)
+    off = np.arange(box.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return x0[box] + off // wy[box], y0[box] + off % wy[box], box
+
 
 def _scale_params(z: int, cfg: TilingConfig):
     shift = WORLD_BITS - z
@@ -3344,11 +3354,11 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
             the zoom-R tile (tx, ty), sorted by (index, seq) — into its
             descendant tiles for zooms R..maxzoom, calling flush_group on
             each.  Per-zoom membership reproduces the Catalyst assignment
-            exactly: natural admission via eff_min/top, plus forced
-            first-per-tile candidates below basezoom (the count machine
-            in flush_group re-runs the exact stream-first check, so the
-            candidate superset is harmless — same contract as
-            forced_keep_tiles).  Cover inside the subtree is the buffered
+            exactly: natural admission via eff_min/top, plus the forced
+            first-per-tile admissions below basezoom that
+            forced_keep_tiles gives the flat relation (``forced_rows``),
+            so every tile group — and its ``n_in`` — is the one the flat
+            assignment builds.  Cover inside the subtree is the buffered
             bbox span clamped to the root's descendants (≤ 4^depth tiles,
             where bbox and walk cover are measured byte-identical — see
             _WIDE_SPAN)."""
@@ -3375,31 +3385,69 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
             gtypes = g["geom_type"]
             geoms = g["geometry"]
             dls = g["_dl"]
-            expl = None
+            expl = lay_code = rank = None
             pos = np.arange(n)
+
+            def forced_rows(zq: int, shift: int, buf: int, k: int, live):
+                """The flat relation's forced admissions inside this
+                subtree (forced_keep_tiles): per (tile, layer,
+                geom_type), the (index, seq, minx)-first competitor over
+                buffered bbox cover, admitted when it is below its
+                minzoom.  Competitors are the non-explicit rows whose
+                world-clamped span is <= _WIDE_SPAN, or that are below
+                their minzoom themselves.  Returns (tx, ty, row)."""
+                nmax = (1 << zq) - 1
+                wx0 = np.maximum(0, (minx - buf - 1) >> shift)
+                wx1 = np.minimum(nmax, (maxx + buf) >> shift)
+                wy0 = np.maximum(0, (miny - buf - 1) >> shift)
+                wy1 = np.minimum(nmax, (maxy + buf) >> shift)
+                span = (wx1 - wx0 + 1) * (wy1 - wy0 + 1)
+                sub = fmz > zq
+                c = pos[
+                    live & ~expl & (wx1 >= wx0) & (wy1 >= wy0)
+                    & ((span <= _WIDE_SPAN) | sub)
+                ]
+                x0 = np.maximum(TX << k, wx0[c])
+                x1 = np.minimum(((TX + 1) << k) - 1, wx1[c])
+                y0 = np.maximum(TY << k, wy0[c])
+                y1 = np.minimum(((TY + 1) << k) - 1, wy1[c])
+                ok = (x1 >= x0) & (y1 >= y0)
+                txs, tys, rep = _box_tiles(x0[ok], x1[ok], y0[ok], y1[ok])
+                rows = c[ok][rep]
+                lay = lay_code[rows]
+                gt = gtypes[rows]
+                o = np.lexsort((rank[rows], gt, lay, tys, txs))
+                txs, tys, rows, lay, gt = txs[o], tys[o], rows[o], lay[o], gt[o]
+                first = np.ones(rows.size, dtype=bool)
+                first[1:] = (
+                    (txs[1:] != txs[:-1]) | (tys[1:] != tys[:-1])
+                    | (lay[1:] != lay[:-1]) | (gt[1:] != gt[:-1])
+                )
+                win = first & sub[rows]
+                return txs[win], tys[win], rows[win]
+
             for zq in range(R, cfg.maxzoom + 1):
                 shift = WORLD_BITS - zq
                 buf = buffer_world(zq, cfg)
-                m = effmin <= zq
-                if forced_on and zq < bz:
+                k = zq - R
+                live = np.ones(n, dtype=bool) if effmax is None else zq <= effmax
+                idx = pos[(effmin <= zq) & live]
+                forced = None
+                if forced_on and zq < bz and (live & (fmz > zq)).any():
                     if expl is None:
-                        atts = g["attrs"]
                         expl = np.fromiter(
                             (
                                 a is not None
                                 and a.get("tippecanoe_minzoom") is not None
-                                for a in atts
+                                for a in g["attrs"]
                             ),
                             dtype=bool,
                             count=n,
                         )
-                    m = m | ((fmz > zq) & ~expl)
-                if effmax is not None:
-                    m = m & (zq <= effmax)
-                idx = pos[m]
-                if idx.size == 0:
-                    continue
-                k = zq - R
+                        lay_code = np.unique(g["layer"], return_inverse=True)[1]
+                        rank = np.empty(n, dtype=np.int64)
+                        rank[np.lexsort((fmz, minx, g["seq"], g["index"]))] = pos
+                    forced = forced_rows(zq, shift, buf, k, live)
                 tx0 = np.maximum(TX << k, (minx[idx] - buf - 1) >> shift)
                 tx1 = np.minimum(((TX + 1) << k) - 1, (maxx[idx] + buf) >> shift)
                 ty0 = np.maximum(TY << k, (miny[idx] - buf - 1) >> shift)
@@ -3408,10 +3456,7 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
                 if not ok.all():
                     idx = idx[ok]
                     tx0, tx1, ty0, ty1 = tx0[ok], tx1[ok], ty0[ok], ty1[ok]
-                    if idx.size == 0:
-                        continue
-                wy = ty1 - ty0 + 1
-                cnt = (tx1 - tx0 + 1) * wy
+                cnt = (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
                 # exact walk membership for wide lines — the same
                 # span > _WIDE_SPAN rule as assign_tiles_all, so the
                 # fused path reproduces the per-(zoom, tile) assignment
@@ -3467,22 +3512,22 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
                         w_pos = np.empty(0, dtype=np.int64)
                         w_tx = w_ty = w_pos
                     rsel = np.flatnonzero(~wide_m)
-                    cnt_r, wy_r = cnt[rsel], wy[rsel]
-                    tx0_r, ty0_r = tx0[rsel], ty0[rsel]
                 else:
-                    rsel = None
-                    cnt_r, wy_r, tx0_r, ty0_r = cnt, wy, tx0, ty0
-                total = int(cnt_r.sum())
-                rep = np.repeat(np.arange(cnt_r.size), cnt_r)
-                base = np.concatenate([[0], np.cumsum(cnt_r)[:-1]])
-                off = np.arange(total) - base[rep]
-                txp = tx0_r[rep] + off // wy_r[rep]
-                typ = ty0_r[rep] + off % wy_r[rep]
-                posn = rep if rsel is None else rsel[rep]
+                    rsel = np.arange(idx.size)
+                txp, typ, rep = _box_tiles(
+                    tx0[rsel], tx1[rsel], ty0[rsel], ty1[rsel]
+                )
+                posn = rsel[rep]
                 if w_pos is not None and len(w_pos):
                     txp = np.concatenate([txp, w_tx])
                     typ = np.concatenate([typ, w_ty])
                     posn = np.concatenate([posn, w_pos])
+                # group positions from here on
+                posn = idx[posn]
+                if forced is not None:
+                    txp = np.concatenate([txp, forced[0]])
+                    typ = np.concatenate([typ, forced[1]])
+                    posn = np.concatenate([posn, forced[2]])
                 total = int(posn.size)
                 if total == 0:
                     continue
@@ -3491,7 +3536,7 @@ def make_stream_kernel(cfg: TilingConfig, shared=None):
                 # (index, seq) order, so position order restores the
                 # stream order within each tile
                 order = np.lexsort((posn, key))
-                rows = idx[posn[order]]
+                rows = posn[order]
                 keys = key[order]
                 gath = {
                     c: g[c][rows]
@@ -3597,7 +3642,6 @@ def tiles_fused(
     shared=None,
     z_lo: int | None = None,
     z_hi: int | None = None,
-    leaves: tuple[DataFrame, DataFrame] | None = None,
     est_rows: int | None = None,
 ) -> DataFrame:
     """The tiles of zooms ``[z_lo, z_hi]`` (default: the whole pyramid)
@@ -3606,15 +3650,14 @@ def tiles_fused(
     zoom's groups in the same pass.  Collapses the per-zoom job fan
     (assign/shuffle/kernel × zooms) that otherwise dominates wall-clock
     with fixed scheduling cost — on a real cluster this is the
-    difference between 15 barriers and 1.  A per-zoom build is this over
-    ``[z, z]``.
+    difference between 15 barriers and 1.  A single-zoom build is this
+    over ``[z, z]``.
 
     Hot tiles (``hot_by_zoom``: zoom → tile → feature count, tiles above
     ``split_budget``) take the split-and-merge path and union in at the
-    end.  ``leaves`` is a precomputed ``vardepth.leaf_plan`` for -at
-    (computed here when absent), so per-zoom builds plan it once.
-    ``est_rows`` is the caller's survivor-row estimate for the range,
-    which sizes the tile shuffle (:func:`_tile_partitions`)."""
+    end.  Under -at the ``vardepth.leaf_plan`` is planned here, once
+    per build.  ``est_rows`` is the caller's survivor-row estimate for
+    the range, which sizes the tile shuffle (:func:`_tile_partitions`)."""
     lo = cfg.minzoom if z_lo is None else z_lo
     hi = cfg.maxzoom if z_hi is None else z_hi
     if not cfg.minzoom <= lo <= hi <= cfg.maxzoom:
@@ -3623,7 +3666,7 @@ def tiles_fused(
         )
     if shared is None and cfg.preserve_shared_nodes:
         # direct callers get the -pn node set computed here; the pyramid
-        # entry passes its cached copy
+        # passes the copy it computed
         from .pyramid import _shared_arrays
 
         shared = _shared_arrays(features, cfg)
@@ -3662,7 +3705,7 @@ def tiles_fused(
         # assignment BEFORE the pyramid shuffle (vardepth.py)
         from . import vardepth
 
-        leaf_tiles, leaf_keys = leaves or vardepth.leaf_plan(featuresT, cfg, shared)
+        leaf_tiles, leaf_keys = vardepth.leaf_plan(featuresT, cfg, shared)
         assigned = vardepth.prune_assignment(assigned, leaf_keys, cfg)
         leaf_tiles = leaf_tiles.filter(F.col("z").between(lo, hi))
     hot_parts = []
