@@ -1,5 +1,5 @@
 """Variable-depth pyramid (-at) — leafing, pruning exactness, and
-per-zoom/fused equivalence (reference: tile.cpp:1701-1713, 3055-3066,
+sub-range/full-build equivalence (reference: tile.cpp:1701-1713, 3055-3066,
 3179-3199)."""
 
 import pytest
@@ -97,27 +97,42 @@ class TestVariableDepth:
         finally:
             stamped.unpersist()
 
-    def test_per_zoom_mode_matches_fused(self, spark, vd_features, tmp_path):
+    def test_per_zoom_mode_matches_fused(self, spark, vd_features, tmp_path, monkeypatch):
+        # a sub-range build filters the leaf plan to its range: a resumed
+        # build over [3, 5] (this corpus leafs at z3/z4 and prunes z4/z5)
+        # equals the one-build pyramid
+        import os
+
         from tippecanoe_spark import pyramid
         from tippecanoe_spark import tile as tilemod
         from tippecanoe_spark.minzoom import stamp_minzoom
 
+        def collect(rows):
+            return {
+                (r["z"], r["x"], r["y"]): (r["n_in"], r["n_out"], bytes(r["tile"]))
+                for r in rows
+            }
+
         cfg = TilingConfig(maxzoom=5, variable_depth_pyramid=True)
         stamped = stamp_minzoom(vd_features, cfg).persist()
         try:
-            fused = {
-                (r["z"], r["x"], r["y"]): bytes(r["tile"])
-                for r in tilemod.tiles_fused(stamped, cfg).collect()
-            }
             out = str(tmp_path / "vd_tiles")
-            pyramid.build_pyramid(
-                spark, stamped, cfg, out_dir=out, stamp=False, fused=False
-            )
-            per_zoom = {
-                (r["z"], r["x"], r["y"]): bytes(r["tile"])
-                for r in spark.read.parquet(out).collect()
-            }
-            assert fused == per_zoom
+            pyramid.build_pyramid(spark, stamped, cfg, out_dir=out, stamp=False)
+            clean = collect(spark.read.parquet(out).collect())
+
+            for z in (3, 4, 5):
+                os.remove(pyramid.zoom_manifest_path(out, z))
+            ranges = []
+            fused = tilemod.tiles_fused
+
+            def spy(*a, **kw):
+                ranges.append((kw["z_lo"], kw["z_hi"]))
+                return fused(*a, **kw)
+
+            monkeypatch.setattr(tilemod, "tiles_fused", spy)
+            pyramid.build_pyramid(spark, stamped, cfg, out_dir=out, stamp=False)
+            assert ranges == [(3, 5)]
+            assert collect(spark.read.parquet(out).collect()) == clean
         finally:
             stamped.unpersist()
 

@@ -270,17 +270,7 @@ def main(argv=None) -> int:
 
     ckpt = args.checkpoint_dir or tempfile.mkdtemp(prefix="tiles_")
     manifests = pyramid.build_pyramid(spark, feats, cfg, out_dir=ckpt)
-    # zooms without tiles have no partition; basePath keeps z a column
-    parts = [
-        pyramid.zoom_dir(ckpt, z) for z in range(cfg.minzoom, cfg.maxzoom + 1)
-        if os.path.isdir(pyramid.zoom_dir(ckpt, z))
-    ]
-    if parts:
-        tiles_df = spark.read.option("basePath", ckpt).parquet(*parts)
-    else:
-        from .tile import TILE_SCHEMA
-
-        tiles_df = spark.createDataFrame([], TILE_SCHEMA)
+    tiles_df = pyramid.read_tiles(spark, ckpt, range(cfg.minzoom, cfg.maxzoom + 1))
     name = args.name or os.path.splitext(os.path.basename(args.output.rstrip("/")))[0]
     # the build's histogram pass records the input bounds in every
     # manifest; checkpoints written without them need the input scan

@@ -10,9 +10,9 @@ fixed cost is what kills scaling efficiency on short zooms, and on a
 real cluster each job is a full barrier, so the job count does not grow
 with the number of zooms.
 
-**Checkpoints** (``out_dir`` set): the build is written
-``partitionBy("z")`` with dynamic partition overwrite, one parquet
-partition ``{out_dir}/z={z}/`` per zoom that has tiles, and one
+**Checkpoints** (``out_dir`` set): the build deletes its zooms'
+partitions and appends ``partitionBy("z")``, one parquet partition
+``{out_dir}/z={z}/`` per zoom that has tiles, and one
 ``_zoom_{z}.json`` manifest per zoom (input rows, tile count, byte
 totals, hot splits, input bounds).  A build drops its zooms' manifests
 before it writes and writes them after its partitions are committed, so
@@ -69,10 +69,13 @@ def coarse_hot_tiles(
     base_z: int = 8,
     survivors: dict[int, int] | None = None,
     bounds: list[int] | None = None,
+    z_lo: int | None = None,
+    z_hi: int | None = None,
 ) -> dict[int, dict[tuple[int, int], int]]:
-    """Hot-tile detection for EVERY zoom from ONE cheap aggregation:
-    a (base-zoom tile of the representative point × feature_minzoom)
-    histogram, rolled up the pyramid driver-side.
+    """Hot-tile detection for zooms ``[z_lo, z_hi]`` (default: every zoom
+    of ``cfg``) from ONE cheap aggregation: a (base-zoom tile of the
+    representative point × feature_minzoom) histogram, rolled up the
+    pyramid driver-side.
 
     - zooms ≤ base_z: a tile's count is the sum of its descendant base
       cells with minzoom ≤ z — exact for rep-point assignment.
@@ -87,6 +90,8 @@ def coarse_hot_tiles(
     of ``cfg`` (the build sizes its tile shuffle from it).  ``bounds``,
     when given, is filled with the input's world bbox ``[minx, miny,
     maxx, maxy]`` (left empty for an empty input)."""
+    lo = cfg.minzoom if z_lo is None else z_lo
+    hi = cfg.maxzoom if z_hi is None else z_hi
     base_z = min(base_z, cfg.maxzoom)
     shift = 32 - base_z
     rows = (
@@ -125,23 +130,21 @@ def coarse_hot_tiles(
                 key = (int(r["cx"]) >> dz, int(r["cy"]) >> dz)
                 agg[key] = agg.get(key, 0) + r["count"]
         hot = {t: c for t, c in agg.items() if c > budget}
-        if hot:
+        if hot and lo <= z <= hi:
             out[z] = hot
         if z == base_z:
             hot_base = hot
     # zooms deeper than base_z: only descendants of hot base cells can be
     # hot — refine those (and only those) with an exact per-zoom count
-    if hot_base and base_z < cfg.maxzoom:
+    deep_zooms = list(range(max(lo, base_z + 1), hi + 1))
+    if hot_base and deep_zooms:
         keys = [(t[0] << base_z) | t[1] for t in hot_base]
         shift_b = 32 - base_z
         cell = F.shiftleft(F.shiftright("minx", shift_b), base_z).bitwiseOR(
             F.shiftright("miny", shift_b)
         )
         subset = stamped.filter(cell.isin(keys))
-        deep = hot_tiles_by_zoom(
-            subset, cfg, list(range(base_z + 1, cfg.maxzoom + 1))
-        )
-        out.update(deep)
+        out.update(hot_tiles_by_zoom(subset, cfg, deep_zooms))
     return out
 
 
@@ -203,21 +206,29 @@ def build_pyramid(
     return [done[z] for z in zooms]
 
 
+def read_tiles(spark: SparkSession, out_dir: str, zooms) -> DataFrame:
+    """The checkpointed tiles of ``zooms`` in ``out_dir``.  A zoom
+    without tiles has no ``z=`` partition; ``basePath`` keeps ``z`` a
+    column.  Empty (``TILE_SCHEMA``) when no zoom has tiles."""
+    parts = [zoom_dir(out_dir, z) for z in zooms if os.path.isdir(zoom_dir(out_dir, z))]
+    if not parts:
+        return spark.createDataFrame([], tilemod.TILE_SCHEMA)
+    return spark.read.option("basePath", out_dir).parquet(*parts)
+
+
 def build_zoom(
     spark: SparkSession,
     stamped: DataFrame,
     cfg: TilingConfig,
-    out_dir: str | None = None,
-    z_lo: int | None = None,
-    z_hi: int | None = None,
+    out_dir: str | None,
+    lo: int,
+    hi: int,
 ) -> list[dict]:
-    """The one build: zooms ``[z_lo, z_hi]`` (default: all of ``cfg``)
-    of ``stamped`` in one :func:`tile.tiles_fused` job; returns their
-    manifests.  With ``out_dir`` the tiles are written ``partitionBy("z")``
-    with dynamic partition overwrite, so other zooms' partitions survive,
+    """The one build: zooms ``[lo, hi]`` of ``stamped`` in one
+    :func:`tile.tiles_fused` job; returns their manifests.  With
+    ``out_dir`` the range's old partitions are deleted and the tiles
+    appended ``partitionBy("z")``, so other zooms' partitions survive,
     and each zoom's manifest follows the commit."""
-    lo = cfg.minzoom if z_lo is None else z_lo
-    hi = cfg.maxzoom if z_hi is None else z_hi
     zooms = range(lo, hi + 1)
     t0 = time.time()
     if out_dir:
@@ -229,8 +240,9 @@ def build_zoom(
             shutil.rmtree(zoom_dir(out_dir, z), ignore_errors=True)
     survivors: dict[int, int] = {}
     world_bounds: list[int] = []
-    hot = coarse_hot_tiles(stamped, cfg, survivors=survivors, bounds=world_bounds)
-    hot = {z: hot[z] for z in zooms if z in hot}
+    hot = coarse_hot_tiles(
+        stamped, cfg, survivors=survivors, bounds=world_bounds, z_lo=lo, z_hi=hi
+    )
     tiles = tilemod.tiles_fused(
         stamped, cfg, hot_by_zoom=hot,
         split_budget=cfg.max_features_per_task,
@@ -238,29 +250,21 @@ def build_zoom(
         z_lo=lo, z_hi=hi, est_rows=sum(survivors[z] for z in zooms),
     )
     if out_dir:
-        (
-            tiles.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("z")
-            .parquet(out_dir)
+        tiles.write.mode("append").partitionBy("z").parquet(out_dir)
+        tiles = read_tiles(spark, out_dir, zooms)
+    by_z = {
+        r["z"]: r
+        for r in tiles.groupBy("z")
+        .agg(
+            F.count(F.lit(1)).alias("n_tiles"),
+            F.sum("n_in").alias("n_in"),
+            F.sum("n_out").alias("n_out"),
+            F.sum("gz_bytes").alias("gz_bytes"),
+            F.max("gz_bytes").alias("max_gz"),
+            F.max("passes").alias("max_passes"),
         )
-        parts = [zoom_dir(out_dir, z) for z in zooms if os.path.isdir(zoom_dir(out_dir, z))]
-        tiles = spark.read.option("basePath", out_dir).parquet(*parts) if parts else None
-    by_z = {}
-    if tiles is not None:
-        by_z = {
-            r["z"]: r
-            for r in tiles.groupBy("z")
-            .agg(
-                F.count(F.lit(1)).alias("n_tiles"),
-                F.sum("n_in").alias("n_in"),
-                F.sum("n_out").alias("n_out"),
-                F.sum("gz_bytes").alias("gz_bytes"),
-                F.max("gz_bytes").alias("max_gz"),
-                F.max("passes").alias("max_passes"),
-            )
-            .collect()
-        }
+        .collect()
+    }
     wall = round(time.time() - t0, 3)
     bounds = list(sinks.lonlat_bounds(*world_bounds))
     manifests = []
