@@ -211,7 +211,7 @@ class TestTileIntegration:
 
         from tippecanoe_spark.config import TilingConfig
         from tippecanoe_spark import mvt
-        from tippecanoe_spark.tile import finalize_tile_pdf, prepare_tile_pdf
+        from tippecanoe_spark.tile import _finalize_tile_dict, prepare_tile_pdf
 
         # -pt: with tiny reduction on, the reference's reduce_tiny_poly
         # deletes zero-NET-area rings outright (clip.cpp:1122-1126) before
@@ -240,8 +240,8 @@ class TestTileIntegration:
         )
         prepared = prepare_tile_pdf(pdf, 0, cfg)
         assert len(prepared) == 1
-        out = finalize_tile_pdf(prepared, 0, cfg)
-        layers = mvt.decode_tile(bytes(out["tile"].iloc[0]))
+        out = _finalize_tile_dict(prepared, 0, cfg)
+        layers = mvt.decode_tile(bytes(out["tile"]))
         geom = layers[0]["features"][0]["cmds"]
         # decoded polygon must be the single positive lobe (3 distinct
         # vertices), not the 4-vertex bowtie

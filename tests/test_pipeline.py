@@ -179,3 +179,16 @@ def test_minzoom_distributed_matches_local(spark):
         a = int((local <= z).sum())
         b = int((closed <= z).sum())
         assert abs(a - b) <= max(2, int(0.02 * max(a, b))), z
+
+
+def test_stamp_minzoom_keeps_caller_cache(spark):
+    """stamp_minzoom releases only the cache it made: a caller's
+    persisted input stays cached after the stamped frame is evaluated."""
+    pages = synth.webpages(spark, 40, partitions=2)
+    feats = features.serialize(geocode.geocode(pages)).persist()
+    try:
+        n = feats.count()
+        assert minzoom.stamp_minzoom(feats, TilingConfig()).count() == n
+        assert feats.is_cached
+    finally:
+        feats.unpersist()

@@ -3,6 +3,9 @@ and the end-to-end pyramid over the synthetic webtext corpus."""
 
 from __future__ import annotations
 
+import json
+from dataclasses import replace
+
 import numpy as np
 import pytest
 
@@ -268,40 +271,88 @@ class TestPyramid:
         }
         assert "vector_layers" in meta["json"]
 
-    def test_hot_tile_split_merge_equivalence(self, spark, small_features):
-        """Hierarchical split-and-merge must produce the same tiles as the
-        direct path (north rule: bounded task size without changing
-        results)."""
-        from tippecanoe_spark import tile as tilemod
-        from tippecanoe_spark.minzoom import stamp_minzoom
+    def test_task_budget_does_not_change_tiles(self, spark, tmp_path):
+        """A tile over ``max_features_per_task`` is built whole like any
+        other: the sequential tiny-polygon accumulator must see every
+        feature of the tile, so the budget cannot change the output."""
+        from tippecanoe_spark import pyramid
+        from tippecanoe_spark.sources.geojson import read_geojson
 
-        cfg = TilingConfig(maxzoom=2, no_feature_dropping=True, gamma=0.0)
-        stamped = stamp_minzoom(small_features, cfg)
-        direct = {
-            (r["z"], r["x"], r["y"]): (r["n_out"], bytes(r["tile"]))
-            for r in tilemod.tiles_for_zoom(stamped, 2, cfg).collect()
-        }
-        # force-split every tile by claiming tiny budgets
-        assigned = tilemod.assign_tiles_all(stamped, cfg, z_lo=2, z_hi=2)
-        from pyspark.sql import functions as F
+        rng = np.random.default_rng(8)
+        d = 0.015  # degrees: under one z2 pixel (360 / 4 / 4096 = 0.022)
+        feats = []
+        for i, (x, y) in enumerate(
+            zip(rng.uniform(-170, 170, 2000), rng.uniform(-70, 70, 2000))
+        ):
+            ring = [[x, y], [x + d, y], [x + d, y + d], [x, y + d], [x, y]]
+            feats.append({
+                "type": "Feature", "properties": {"i": i},
+                "geometry": {"type": "Polygon", "coordinates": [ring]},
+            })
+        src = tmp_path / "squares.geojson"
+        src.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
 
-        counts = {
-            (r["tx"], r["ty"]): r["n"]
-            for r in assigned.groupBy("tx", "ty")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        split = {
-            (r["z"], r["x"], r["y"]): (r["n_out"], bytes(r["tile"]))
-            for r in tilemod.tiles_fused(
-                stamped, cfg, hot_by_zoom={2: counts}, split_budget=10,
-                z_lo=2, z_hi=2,
-            ).collect()
-        }
-        assert set(direct) == set(split)
-        for key in direct:
-            assert direct[key][0] == split[key][0], key
-            assert direct[key][1] == split[key][1], key
+        def build(cfg, name):
+            out = str(tmp_path / name)
+            pyramid.build_pyramid(
+                spark, read_geojson(spark, str(src), layer="sq", cfg=cfg), cfg,
+                out_dir=out,
+            )
+            return {
+                (r["z"], r["x"], r["y"]): (r["n_in"], r["n_out"], bytes(r["tile"]))
+                for r in pyramid.read_tiles(spark, out, range(3)).collect()
+            }
+
+        cfg = TilingConfig(maxzoom=2)
+        whole = build(cfg, "whole")
+        budgeted = build(replace(cfg, max_features_per_task=100), "budgeted")
+        assert len(whole) == 21
+        assert budgeted == whole
+
+
+class TestStatsObserver:
+    def test_metadata_independent_of_tile_order(self):
+        """The streaming exports see tiles in toLocalIterator order, which
+        is not a tile order: the metadata must not depend on it."""
+        import random
+
+        from tippecanoe_spark import sinks
+
+        rows = []
+        for t in range(12):
+            lb = mvt.LayerBuilder("a")
+            pts = mvt.LayerBuilder("b")
+            for i in range(30):
+                # `v` is a number in some tiles and a string in others;
+                # `name` has 360 distinct values, more than the 100 kept
+                v = i if t % 3 else f"s{i}"
+                lb.add_feature(
+                    mvt.GEOM_LINE, [(1, 0, 0), (2, i + 1, t + 1)],
+                    {"name": f"n{t * 30 + i}", "v": v, f"k{t}": True},
+                )
+            # one point and one polygon per tile: a geometry tie
+            pts.add_feature(mvt.GEOM_POINT, [(1, t, t)], {"t": t})
+            pts.add_feature(
+                mvt.GEOM_POLYGON,
+                [(1, 0, 0), (2, 5, 0), (2, 5, 5), (7, 0, 0)], {"t": -t},
+            )
+            rows.append({"tile": mvt.encode_tile([lb, pts])})
+
+        want = sinks.make_metadata("t", rows, 0, 2)
+        shuffled = list(rows)
+        for seed in range(3):
+            random.Random(seed).shuffle(shuffled)
+            assert sinks.make_metadata("t", shuffled, 0, 2) == want
+        assert sinks.make_metadata("t", rows[::-1], 0, 2) == want
+        doc = json.loads(want["json"])
+        fields = {vl["id"]: vl["fields"] for vl in doc["vector_layers"]}
+        assert fields["a"]["v"] == "Mixed" and fields["a"]["name"] == "String"
+        name = next(
+            at for at in doc["tilestats"]["layers"][0]["attributes"]
+            if at["attribute"] == "name"
+        )
+        assert name["count"] == 100
+        assert name["values"] == sorted(f"n{i}" for i in range(360))[:100]
 
 
 class TestAsNeededStrategies:

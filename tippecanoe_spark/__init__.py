@@ -15,8 +15,8 @@ Subpackages
 - ``minzoom``   global curve-order + feature_minzoom stamping (T8)
 - ``geom``      clip / simplify / polygon kernels (numpy, §2.4)
 - ``mvt``       Mapbox Vector Tile protobuf encoder/decoder (E1-E3)
-- ``tile``      per-tile applyInPandas kernel (write_tile analog)
-- ``pyramid``   one-build driver, zoom-partitioned checkpoints + skew split (§3.1)
+- ``tile``      mapInPandas stream kernel over sorted tile groups (write_tile analog)
+- ``pyramid``   one-build driver, zoom-partitioned checkpoints (§3.1)
 - ``joins``     PIP / kNN spatial joins, tile-join, CSV attribute join (§2.6)
 - ``sinks``     tiles table, mbtiles/dirtiles export (S7-S9)
 """

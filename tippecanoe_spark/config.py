@@ -201,13 +201,11 @@ class TilingConfig:
     # clip.cpp:260-388).  The reference has no off switch; the flag
     # exists for tests and A/B benches.
     clean_polygons: bool = True
-    # skew control (ours, SURVEY §7.6): max features a single tile task buffers
-    # before hierarchical split-by-child-quadkey kicks in.  Well below the
-    # 200k per-tile feature budget: the split bounds *task* latency (the
-    # serial prepare work), the budget bounds tile contents.
+    # dense-tile report threshold (ours): a build counts, per zoom, the
+    # tiles whose coarse histogram count exceeds this (the manifest's
+    # ``hot_tiles_split``).  Reported only: every tile is built whole by
+    # one kernel call, as the reference builds one tile in one thread.
     max_features_per_task: int = 200_000
-    # salting fan-out for hot low-zoom tiles (ours)
-    hot_tile_salt: int = 8
     # subtree fan-out depth for the fused pyramid (ours, SURVEY §7.6):
     # the deepest `subtree_depth` zooms ship ONE shuffle row per
     # (feature, root tile at zoom maxzoom - subtree_depth) instead of one

@@ -106,31 +106,36 @@ def decode_png(data: bytes) -> np.ndarray:
     out = np.empty((h, stride), dtype=np.uint8)
     bpp = channels
     pos = 0
-    prev = np.zeros(stride, dtype=np.uint8)
+    # int32 row accumulators: filter sums wrap with & 0xFF, never in uint8
+    prev = np.zeros(stride, dtype=np.int32)
     for r in range(h):
         ftype = raw[pos]
-        row = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=pos + 1).copy()
+        row = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=pos + 1).astype(
+            np.int32
+        )
         pos += 1 + stride
         if ftype == 0:
             pass
-        elif ftype == 1:  # sub
-            for i in range(bpp, stride):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
+        elif ftype == 1:  # sub: a running sum per channel
+            row = np.cumsum(row.reshape(w, bpp), axis=0, dtype=np.int64).reshape(
+                stride
+            ).astype(np.int32) & 0xFF
         elif ftype == 2:  # up
-            row += prev
-        elif ftype == 3:  # average
+            row = (row + prev) & 0xFF
+        elif ftype in (3, 4):  # average / paeth: sequential along the row
+            cur, up = row.tolist(), prev.tolist()
             for i in range(stride):
-                left = int(row[i - bpp]) if i >= bpp else 0
-                row[i] = (row[i] + ((left + int(prev[i])) >> 1)) & 0xFF
-        elif ftype == 4:  # paeth
-            for i in range(stride):
-                left = int(row[i - bpp]) if i >= bpp else 0
-                ul = int(prev[i - bpp]) if i >= bpp else 0
-                row[i] = (row[i] + _paeth(left, int(prev[i]), ul)) & 0xFF
+                left = cur[i - bpp] if i >= bpp else 0
+                if ftype == 3:
+                    pred = (left + up[i]) >> 1
+                else:
+                    pred = _paeth(left, up[i], up[i - bpp] if i >= bpp else 0)
+                cur[i] = (cur[i] + pred) & 0xFF
+            row = np.array(cur, dtype=np.int32)
         else:
             raise ValueError(f"bad PNG filter {ftype}")
         out[r] = row
-        prev = out[r]
+        prev = row
     return out.reshape(h, w, channels)
 
 

@@ -287,8 +287,11 @@ def stamp_minzoom(
 
     # repartitionByRange SAMPLES its input (one extra evaluation of the
     # whole geocode/serialize lineage) before the shuffle evaluates it
-    # again — cache the input so the python pipeline runs once
-    features = features.persist()
+    # again — cache the input so the python pipeline runs once (a caller's
+    # cache is used as is, and stays the caller's to release)
+    owned = not features.is_cached
+    if owned:
+        features = features.persist()
     ordered = features.repartitionByRange(
         partitions, F.col("index"), F.col("seq")
     ).sortWithinPartitions("index", "seq")
@@ -447,7 +450,8 @@ def stamp_minzoom(
 
     # `ordered` is materialized (the stats collect above was an action),
     # so the pre-shuffle input cache can be released now
-    features.unpersist()
+    if owned:
+        features.unpersist()
     # NOTE: feature_minzoom is the RAW cascade value; the forced
     # first-per-tile keeps (tile.cpp:1290-1301) are per-(tile, feature)
     # and are admitted at assignment time (tile.forced_keep_tiles) and

@@ -3,27 +3,29 @@
 Every tile is built by one code path, :func:`tile.tiles_fused`: tile
 assignment for a zoom range, ONE shuffle keyed (zz, tx, ty), and the
 streaming kernel.  :func:`build_zoom` runs it once per build: a
-(base cell × feature_minzoom) histogram (hot tiles, survivor counts and
-the input bounds), an optional exact count under hot deep cells, the
-build itself, and one aggregation for the per-zoom manifests.  Per-job
-fixed cost is what kills scaling efficiency on short zooms, and on a
-real cluster each job is a full barrier, so the job count does not grow
-with the number of zooms.
+(base cell × feature_minzoom) histogram (survivor counts, the input
+bounds and the tiles over the task budget), the build itself, and one
+aggregation for the per-zoom manifests.  Per-job fixed cost is what
+kills scaling efficiency on short zooms, and on a real cluster each job
+is a full barrier, so the job count does not grow with the number of
+zooms.
 
 **Checkpoints** (``out_dir`` set): the build deletes its zooms'
 partitions and appends ``partitionBy("z")``, one parquet partition
 ``{out_dir}/z={z}/`` per zoom that has tiles, and one
 ``_zoom_{z}.json`` manifest per zoom (input rows, tile count, byte
-totals, hot splits, input bounds).  A build drops its zooms' manifests
-before it writes and writes them after its partitions are committed, so
-a zoom with a manifest is complete.  A re-run keeps those zooms and
-rebuilds the hull ``[min(missing), max(missing)]`` of the rest in one
-build — resume is zoom-granular, the work is not split by zoom.
+totals, tiles over the task budget, input bounds).  A build drops its
+zooms' manifests before it writes and writes them after its partitions
+are committed, so a zoom with a manifest is complete.  A re-run keeps
+those zooms and rebuilds the hull ``[min(missing), max(missing)]`` of
+the rest in one build — resume is zoom-granular, the work is not split
+by zoom.
 
-Hot-tile detection starts from the one histogram; only descendants of
-hot base cells pay an exact per-tile count (statistics-driven split
-planning — the reference's largest-shard-first scheduling,
-tile.cpp:3327-3378, turned into an explicit plan)."""
+Dense tiles are not split: every tile is one group of the one stream
+kernel, as the reference builds each tile in one thread, and the hash
+of the tile key over the shuffle's tasks spreads them.  The manifest's
+``hot_tiles_split`` counts, per zoom, the tiles whose histogram count
+exceeds ``max_features_per_task``: reported, not acted on."""
 
 from __future__ import annotations
 
@@ -72,18 +74,16 @@ def coarse_hot_tiles(
     z_lo: int | None = None,
     z_hi: int | None = None,
 ) -> dict[int, dict[tuple[int, int], int]]:
-    """Hot-tile detection for zooms ``[z_lo, z_hi]`` (default: every zoom
-    of ``cfg``) from ONE cheap aggregation: a (base-zoom tile of the
-    representative point × feature_minzoom) histogram, rolled up the
-    pyramid driver-side.
+    """The build's one histogram: a (base-zoom tile of the
+    representative point × feature_minzoom) count, ONE cheap
+    aggregation rolled up the pyramid driver-side.
 
-    - zooms ≤ base_z: a tile's count is the sum of its descendant base
-      cells with minzoom ≤ z — exact for rep-point assignment.
-    - zooms > base_z: a deeper tile is contained in a base cell, so its
-      count is bounded by that cell's; cells under budget prove no hot
-      descendants.  (Long-line fan-out is not counted — lines contribute
-      only at their representative point; the budget escalation in the
-      tile kernel still bounds those tiles' outputs.)
+    Returns, for zooms ``[z_lo, z_hi]`` (default: every zoom of ``cfg``)
+    up to ``base_z``, the tiles whose count exceeds
+    ``cfg.max_features_per_task`` (zoom → tile → count).  A tile's count
+    is the sum of its descendant base cells with minzoom ≤ z — exact for
+    rep-point assignment (long-line fan-out is not counted).  Zooms
+    deeper than ``base_z`` are not counted.
 
     ``survivors``, when given, is filled from the same histogram with
     zoom → number of features with feature_minzoom <= z, for every zoom
@@ -119,54 +119,17 @@ def coarse_hot_tiles(
             by_mz[mz] = by_mz.get(mz, 0) + r["count"]
         for z in range(cfg.minzoom, cfg.maxzoom + 1):
             survivors[z] = sum(c for mz, c in by_mz.items() if mz <= z)
-    budget = cfg.max_features_per_task
     out: dict[int, dict[tuple[int, int], int]] = {}
-    hot_base: dict[tuple[int, int], int] = {}
-    for z in range(cfg.minzoom, base_z + 1):
+    for z in range(max(lo, cfg.minzoom), min(hi, base_z) + 1):
         agg: dict[tuple[int, int], int] = {}
         dz = base_z - z
         for r in rows:
             if r["feature_minzoom"] <= z:
                 key = (int(r["cx"]) >> dz, int(r["cy"]) >> dz)
                 agg[key] = agg.get(key, 0) + r["count"]
-        hot = {t: c for t, c in agg.items() if c > budget}
-        if hot and lo <= z <= hi:
+        hot = {t: c for t, c in agg.items() if c > cfg.max_features_per_task}
+        if hot:
             out[z] = hot
-        if z == base_z:
-            hot_base = hot
-    # zooms deeper than base_z: only descendants of hot base cells can be
-    # hot — refine those (and only those) with an exact per-zoom count
-    deep_zooms = list(range(max(lo, base_z + 1), hi + 1))
-    if hot_base and deep_zooms:
-        keys = [(t[0] << base_z) | t[1] for t in hot_base]
-        shift_b = 32 - base_z
-        cell = F.shiftleft(F.shiftright("minx", shift_b), base_z).bitwiseOR(
-            F.shiftright("miny", shift_b)
-        )
-        subset = stamped.filter(cell.isin(keys))
-        out.update(hot_tiles_by_zoom(subset, cfg, deep_zooms))
-    return out
-
-
-def hot_tiles_by_zoom(
-    stamped: DataFrame, cfg: TilingConfig, zooms: list[int]
-) -> dict[int, dict[tuple[int, int], int]]:
-    """Per-tile counts for the given zooms in ONE union-aggregation job;
-    returns only tiles above the task budget."""
-    if not zooms:
-        return {}
-    assigned = tilemod.assign_tiles_all(
-        stamped, cfg, z_lo=min(zooms), z_hi=max(zooms)
-    ).filter(F.col("zz").isin(zooms))
-    rows = (
-        assigned.groupBy("zz", "tx", "ty")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > cfg.max_features_per_task)
-        .collect()
-    )
-    out: dict[int, dict[tuple[int, int], int]] = {}
-    for r in rows:
-        out.setdefault(r["zz"], {})[(r["tx"], r["ty"])] = r["n"]
     return out
 
 
@@ -244,9 +207,7 @@ def build_zoom(
         stamped, cfg, survivors=survivors, bounds=world_bounds, z_lo=lo, z_hi=hi
     )
     tiles = tilemod.tiles_fused(
-        stamped, cfg, hot_by_zoom=hot,
-        split_budget=cfg.max_features_per_task,
-        shared=_shared_arrays(stamped, cfg),
+        stamped, cfg, shared=_shared_arrays(stamped, cfg),
         z_lo=lo, z_hi=hi, est_rows=sum(survivors[z] for z in zooms),
     )
     if out_dir:

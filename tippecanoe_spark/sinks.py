@@ -21,7 +21,7 @@ import hashlib
 import json
 import os
 import sqlite3
-from collections import Counter, defaultdict
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -33,52 +33,8 @@ from .text import truncate16
 def tilestats(tiles_rows) -> dict:
     """Per-layer per-attribute type/value histograms (T35,
     mbtiles.cpp:206-300) with the reference's caps: 1000 attributes,
-    1000 sample values, 100 per attribute."""
-    layers: dict[str, dict] = {}
-    for row in tiles_rows:
-        for layer in mvt.decode_tile(bytes(row["tile"])):
-            st = layers.setdefault(
-                truncate16(layer["name"], 256),  # mbtiles.cpp:851
-                {"count": 0, "geometry": Counter(), "attribs": defaultdict(Counter)},
-            )
-            for feat in layer["features"]:
-                st["count"] += 1
-                st["geometry"][feat["type"]] += 1
-                for k, v in feat["attrs"].items():
-                    k = truncate16(k, 256)  # mbtiles.cpp:871
-                    if isinstance(v, str):
-                        v = truncate16(v, 256)  # mbtiles.cpp:330
-                    if len(st["attribs"]) >= 1000 and k not in st["attribs"]:
-                        continue
-                    vals = st["attribs"][k]
-                    if len(vals) < 100:
-                        vals[json.dumps(v, default=str)] += 1
-    geom_names = {1: "Point", 2: "LineString", 3: "Polygon"}
-    out_layers = []
-    for name, st in layers.items():
-        attrs = []
-        for k, vals in list(st["attribs"].items())[:1000]:
-            parsed = [json.loads(s) for s in vals]
-            types = {"string" if isinstance(p, str) else "boolean" if isinstance(p, bool) else "number" for p in parsed}
-            attrs.append(
-                {
-                    "attribute": k,
-                    "count": len(vals),
-                    "type": sorted(types)[0] if len(types) == 1 else "mixed",
-                    "values": sorted(parsed, key=lambda p: json.dumps(p, default=str))[:100],
-                }
-            )
-        dominant = st["geometry"].most_common(1)[0][0] if st["geometry"] else 1
-        out_layers.append(
-            {
-                "layer": name,
-                "count": st["count"],
-                "geometry": geom_names.get(dominant, "Unknown"),
-                "attributeCount": len(attrs),
-                "attributes": attrs,
-            }
-        )
-    return {"layerCount": len(out_layers), "layers": out_layers}
+    100 values per attribute."""
+    return _observed(tiles_rows).tilestats()
 
 
 def make_metadata(
@@ -87,52 +43,17 @@ def make_metadata(
     minzoom: int,
     maxzoom: int,
     bounds: tuple[float, float, float, float] | None = None,
-    with_tilestats: bool = True,
 ) -> dict:
     """name/format/bounds/center/zooms + json(vector_layers, tilestats)
     (make_metadata, mbtiles.cpp:668+; bounds logic main.cpp:2795-2829)."""
-    layer_keys: dict[str, dict[str, str]] = {}
+    return _observed(tiles_rows).metadata(name, minzoom, maxzoom, bounds)
+
+
+def _observed(tiles_rows) -> StatsObserver:
+    obs = StatsObserver()
     for row in tiles_rows:
-        for layer in mvt.decode_tile(bytes(row["tile"])):
-            keys = layer_keys.setdefault(layer["name"], {})
-            for feat in layer["features"]:
-                for k, v in feat["attrs"].items():
-                    t = (
-                        "Boolean"
-                        if isinstance(v, bool)
-                        else "Number"
-                        if isinstance(v, (int, float))
-                        else "String"
-                    )
-                    keys.setdefault(k, t)
-    vector_layers = [
-        {
-            "id": name_,
-            "description": "",
-            "minzoom": minzoom,
-            "maxzoom": maxzoom,
-            "fields": fields,
-        }
-        for name_, fields in sorted(layer_keys.items())
-    ]
-    if bounds is None:
-        bounds = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
-    w, s, e, n = bounds
-    meta = {
-        "name": name,
-        "format": "pbf",
-        "type": "overlay",
-        "version": "2",
-        "minzoom": str(minzoom),
-        "maxzoom": str(maxzoom),
-        "bounds": f"{w},{s},{e},{n}",
-        "center": f"{(w + e) / 2},{(s + n) / 2},{maxzoom}",
-        "json": json.dumps(
-            {"vector_layers": vector_layers}
-            | ({"tilestats": tilestats(tiles_rows)} if with_tilestats else {})
-        ),
-    }
-    return meta
+        obs.observe(row)
+    return obs
 
 
 def bounds_from_features(features: DataFrame) -> tuple[float, float, float, float]:
@@ -268,25 +189,59 @@ def enumerate_tiles(tiles: DataFrame) -> DataFrame:
     return tiles.select("z", "x", "y").orderBy("z", "x", "y")
 
 
+class _SmallestKeys:
+    """The ``limit`` smallest keys offered, each with a value made by
+    ``make``.  Which keys are kept does not depend on the order they are
+    offered in: once full, a key enters only by evicting the largest, and
+    an evicted key is larger than every key kept after it, so it never
+    comes back."""
+
+    def __init__(self, limit: int, make=lambda: True) -> None:
+        self.kept: dict = {}
+        self.limit = limit
+        self.make = make
+        self.top = None  # largest kept key, tracked once full
+
+    def offer(self, key):
+        """The value kept for ``key``, or None if ``key`` is not among
+        the ``limit`` smallest."""
+        items = self.kept
+        if key in items:
+            return items[key]
+        if len(items) >= self.limit:
+            if key > self.top:
+                return None
+            del items[self.top]
+        val = items[key] = self.make()
+        if len(items) >= self.limit:
+            self.top = max(items)
+        return val
+
+
 class StatsObserver:
     """Single-pass tilestats + vector_layers accumulator so exports can
     stream tiles via ``toLocalIterator()`` instead of holding every blob
     in driver memory (a z14 build has 10⁵-10⁶ tiles; collect() is a
-    driver OOM at scale)."""
+    driver OOM at scale).  The metadata does not depend on the order the
+    tiles arrive in: a field's type comes from the set of types seen,
+    each layer keeps its 1000 smallest attribute names and each attribute
+    its 100 smallest values (by JSON key)."""
 
     def __init__(self) -> None:
-        self.rows: list[dict] = []  # decoded stat rows, NOT tile bytes
         self._stats_layers: dict[str, dict] = {}
-        self._layer_keys: dict[str, dict[str, str]] = {}
+        self._layer_types: dict[str, dict[str, set]] = {}
 
     def observe(self, row) -> None:
         for layer in mvt.decode_tile(bytes(row["tile"])):
             lname = truncate16(layer["name"], 256)  # mbtiles.cpp:851
             st = self._stats_layers.setdefault(
                 lname,
-                {"count": 0, "geometry": Counter(), "attribs": defaultdict(Counter)},
+                {
+                    "count": 0, "geometry": Counter(),
+                    "attribs": _SmallestKeys(1000, lambda: _SmallestKeys(100)),
+                },
             )
-            keys = self._layer_keys.setdefault(lname, {})
+            types = self._layer_types.setdefault(lname, {})
             for feat in layer["features"]:
                 st["count"] += 1
                 st["geometry"][feat["type"]] += 1
@@ -294,31 +249,22 @@ class StatsObserver:
                     k = truncate16(k, 256)  # mbtiles.cpp:871
                     if isinstance(v, str):
                         v = truncate16(v, 256)  # mbtiles.cpp:330
-                    keys.setdefault(
-                        k,
+                    types.setdefault(k, set()).add(
                         "Boolean" if isinstance(v, bool)
                         else "Number" if isinstance(v, (int, float))
-                        else "String",
+                        else "String"
                     )
-                    if len(st["attribs"]) >= 1000 and k not in st["attribs"]:
-                        continue
-                    vals = st["attribs"][k]
-                    if len(vals) < 100:
-                        vals[json.dumps(v, default=str)] += 1
+                    vals = st["attribs"].offer(k)
+                    if vals is not None:
+                        vals.offer(json.dumps(v, default=str))
 
-    def metadata(
-        self,
-        name: str,
-        minzoom: int,
-        maxzoom: int,
-        bounds: tuple[float, float, float, float] | None = None,
-    ) -> dict:
+    def tilestats(self) -> dict:
         geom_names = {1: "Point", 2: "LineString", 3: "Polygon"}
         out_layers = []
-        for lname, st in self._stats_layers.items():
+        for lname, st in sorted(self._stats_layers.items()):
             attrs = []
-            for k, vals in list(st["attribs"].items())[:1000]:
-                parsed = [json.loads(s) for s in vals]
+            for k, vals in sorted(st["attribs"].kept.items()):
+                parsed = [json.loads(s) for s in sorted(vals.kept)]
                 types = {
                     "string" if isinstance(p, str)
                     else "boolean" if isinstance(p, bool)
@@ -328,14 +274,14 @@ class StatsObserver:
                 attrs.append(
                     {
                         "attribute": k,
-                        "count": len(vals),
+                        "count": len(parsed),
                         "type": sorted(types)[0] if len(types) == 1 else "mixed",
-                        "values": sorted(
-                            parsed, key=lambda p: json.dumps(p, default=str)
-                        )[:100],
+                        "values": parsed,
                     }
                 )
-            dominant = st["geometry"].most_common(1)[0][0] if st["geometry"] else 1
+            # ties go to the simpler geometry, as in _tilestats_json
+            geom = st["geometry"]
+            dominant = min(geom, key=lambda t: (-geom[t], t)) if geom else 1
             out_layers.append(
                 {
                     "layer": lname,
@@ -345,15 +291,27 @@ class StatsObserver:
                     "attributes": attrs,
                 }
             )
+        return {"layerCount": len(out_layers), "layers": out_layers}
+
+    def metadata(
+        self,
+        name: str,
+        minzoom: int,
+        maxzoom: int,
+        bounds: tuple[float, float, float, float] | None = None,
+    ) -> dict:
         vector_layers = [
             {
                 "id": lname,
                 "description": "",
                 "minzoom": minzoom,
                 "maxzoom": maxzoom,
-                "fields": fields,
+                "fields": {
+                    k: next(iter(ts)) if len(ts) == 1 else "Mixed"
+                    for k, ts in sorted(fields.items())
+                },
             }
-            for lname, fields in sorted(self._layer_keys.items())
+            for lname, fields in sorted(self._layer_types.items())
         ]
         if bounds is None:
             bounds = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
@@ -368,13 +326,7 @@ class StatsObserver:
             "bounds": f"{w},{s},{e},{n}",
             "center": f"{(w + e) / 2},{(s + n) / 2},{maxzoom}",
             "json": json.dumps(
-                {
-                    "vector_layers": vector_layers,
-                    "tilestats": {
-                        "layerCount": len(out_layers),
-                        "layers": out_layers,
-                    },
-                }
+                {"vector_layers": vector_layers, "tilestats": self.tilestats()}
             ),
         }
 

@@ -3,35 +3,31 @@
 The Spark re-expression of write_tile (reference: tile.cpp:1665-3079).
 
 Physical strategy (chosen for deep-zoom scale, where most tiles hold a
-handful of points):
-
-- **Cold tiles** (the vast majority): one hash shuffle on the tile key +
-  ``sortWithinPartitions(zz, tx, ty, index, seq)`` + a *streaming*
-  ``mapInPandas`` kernel that walks each sorted partition, slicing
-  consecutive tile groups out of the Arrow batches (carrying partial
-  groups across batch boundaries).  This avoids per-group
-  ``applyInPandas`` overhead — at z10+ a zoom can hold 10⁵-10⁶ tiny
-  tiles, and per-group JVM↔Python round trips dominate there.  Small
-  all-point groups take a further fast path: batch-vectorized scaling,
-  direct MVT assembly, no pandas objects per tile.
-- **Hot tiles** (identified by a cheap count aggregation): hierarchical
-  split-and-merge — sub-partition by child quadkey, run the
-  split-associative stages per sub-partition, merge per tile for the
-  order-dependent stages.  These are few, so ``applyInPandas`` per group
-  is fine.
+handful of points): one hash shuffle on the tile key +
+``sortWithinPartitions(zz, tx, ty, index, seq)`` + a *streaming*
+``mapInPandas`` kernel that walks each sorted partition, slicing
+consecutive tile groups out of the Arrow batches (carrying partial
+groups across batch boundaries).  This avoids the per-group overhead of
+a grouped-map UDF — at z10+ a zoom can hold 10⁵-10⁶ tiny tiles, and
+per-group JVM↔Python round trips dominate there.  Small all-point groups take a
+further fast path: batch-vectorized scaling, direct MVT assembly, no
+pandas objects per tile.  Every tile, dense or not, is one group of one
+kernel call, so the sequential per-tile stages (tiny-polygon
+accumulation, the prefilter hook, drops) always see the whole tile; the
+hash of the tile key over the shuffle's tasks spreads the dense tiles.
 
 One driver, :func:`tiles_fused`, assigns, shuffles and kernels the tiles
 of any zoom range; :func:`tiles_for_zoom` is that build over ``[z, z]``,
 and the pyramid (checkpointed or not) runs it once over the zooms it
 builds.
 
-Stage semantics:
+Stage semantics, per tile group:
 
-- :func:`prepare_tile_pdf` — split-associative stages: clip to buffered
-  tile (clip_to_tile, tile.cpp:974-1057), scale to the tile grid
-  (to_tile_scale, clip.cpp:507-519), Douglas-Peucker / Visvalingam,
-  tiny-polygon reduction, too-small-line drop.
-- :func:`finalize_tile_pdf` — order-dependent stages: gamma thinning,
+- :func:`prepare_tile_pdf` — clip to buffered tile (clip_to_tile,
+  tile.cpp:974-1057), scale to the tile grid (to_tile_scale,
+  clip.cpp:507-519), Douglas-Peucker / Visvalingam, tiny-polygon
+  reduction, too-small-line drop.
+- :func:`_finalize_tile_dict` — order-dependent stages: gamma thinning,
   clustering, as-needed drops with tile-local threshold escalation,
   top-k truncation, attribute accumulation, MVT encode + gzip + budget
   loop.
@@ -63,21 +59,11 @@ from .geom import simplify as simpmod
 
 WORLD_BITS = 32
 
-# schema of prepared (tile-local) features between the two hot-path phases
-PREPARED_SCHEMA = T.StructType(
-    [
-        T.StructField("tx", T.IntegerType()),
-        T.StructField("ty", T.IntegerType()),
-        T.StructField("feature_id", T.LongType()),
-        T.StructField("layer", T.StringType()),
-        T.StructField("geom_type", T.IntegerType()),
-        T.StructField("geometry", T.BinaryType()),
-        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("index", T.LongType()),
-        T.StructField("extent", T.LongType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("feature_minzoom", T.IntegerType()),
-    ]
+# columns of prepared (tile-local) features: prepare_tile_pdf's output,
+# _finalize_tile_dict's input
+_PREPARED_COLS = (
+    "tx", "ty", "feature_id", "layer", "geom_type", "geometry", "attrs",
+    "index", "extent", "seq", "feature_minzoom",
 )
 
 TILE_SCHEMA = T.StructType(
@@ -657,8 +643,7 @@ def assign_tiles_all(
 
     ``z_lo``/``z_hi`` restrict the produced zoom range (inclusive) — a
     per-zoom build asks for one zoom, and the subtree fan-out path keeps
-    only the shallow zooms (or only the deep zooms under hot roots) on
-    per-(zoom, tile) rows."""
+    only the shallow zooms on per-(zoom, tile) rows."""
     lo = cfg.minzoom if z_lo is None else max(cfg.minzoom, z_lo)
     hi = cfg.maxzoom if z_hi is None else min(cfg.maxzoom, z_hi)
     top = F.lit(hi)
@@ -806,7 +791,6 @@ def _subtree_root_rows(
     features: DataFrame,
     cfg: TilingConfig,
     R: int,
-    exclude_keys: set[int] | None = None,
 ) -> DataFrame:
     """One row per (candidate feature, zoom-R root tile), tagged
     ``zz = -(R + 1)``: the shuffle-side half of the subtree fan-out.  The
@@ -821,8 +805,7 @@ def _subtree_root_rows(
     bbox span (wide lines: the exact conservative walk) at zoom R — a
     feature touching a buffered descendant tile always touches the
     buffered root (buffers shrink with depth), so root cover is
-    sufficient.  ``exclude_keys`` ((tx << R) | ty packed) removes hot
-    roots whose descendants are built on per-(zoom, tile) rows instead."""
+    sufficient."""
     top = F.lit(cfg.maxzoom)
     if "feature_maxzoom" in features.columns:
         top = F.least(top, F.col("feature_maxzoom"))
@@ -865,11 +848,6 @@ def _subtree_root_rows(
     )
     out_cols = [f.name for f in features.schema.fields] + ["tx", "ty"]
     out = small.select(*out_cols).unionByName(wide.select(*out_cols))
-    if exclude_keys:
-        key_col = F.shiftleft(F.col("tx").cast("long"), R).bitwiseOR(
-            F.col("ty").cast("long")
-        )
-        out = out.filter(~key_col.isin(list(exclude_keys)))
     return out.withColumn("zz", F.lit(-(R + 1)))
 
 
@@ -951,7 +929,7 @@ def _shared_px_for_tile(shared, tx: int, ty: int, shift: int, detail: int,
 
 
 # ---------------------------------------------------------------------------
-# phase 1: prepare (clip + scale + simplify) — split-associative
+# phase 1: prepare (clip + scale + simplify)
 # ---------------------------------------------------------------------------
 
 def _cmds_to_rings(cmds) -> list[tuple[np.ndarray, np.ndarray]]:
@@ -2056,10 +2034,10 @@ def _cleanup_coalesced_line(cmds: list, cfg: TilingConfig) -> list:
 
 def prepare_tile_pdf(pdf: pd.DataFrame, z: int, cfg: TilingConfig,
                      shared=None) -> pd.DataFrame:
-    """Clip + scale + simplify the features of one tile (or one child-quad
-    sub-partition of a hot tile).  Column-wise fast path for points;
-    python loop only for the line/polygon minority."""
-    cols = [f.name for f in PREPARED_SCHEMA.fields]
+    """Clip + scale + simplify the features of one tile.  Column-wise
+    fast path for points; python loop only for the line/polygon
+    minority."""
+    cols = list(_PREPARED_COLS)
     if cfg.prefilter is not None:
         # per-tile user hook (plugin.cpp prefilter role): raw group rows
         # before clip/scale/simplify
@@ -3097,18 +3075,8 @@ def _finalize_tile_dict(pdf: pd.DataFrame, z: int, cfg: TilingConfig) -> dict | 
     return row
 
 
-def finalize_tile_pdf(pdf: pd.DataFrame, z: int, cfg: TilingConfig) -> pd.DataFrame:
-    cols = list(_TILE_COLS)
-    if cfg.global_threshold_retry:
-        cols += ["f_gap", "f_ext", "f_seq", "f_attr"]
-    row = _finalize_tile_dict(pdf, z, cfg)
-    if row is None:
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
-    return pd.DataFrame([row], columns=cols)
-
-
 # ---------------------------------------------------------------------------
-# streaming kernel for cold tiles
+# streaming kernel: every tile of every zoom
 # ---------------------------------------------------------------------------
 
 def _fast_eligible(cfg: TilingConfig) -> bool:
@@ -3600,45 +3568,9 @@ def tiles_for_zoom(features: DataFrame, z: int, cfg: TilingConfig,
     return tiles_fused(features, cfg, shared=shared, z_lo=z, z_hi=z)
 
 
-def _hot_tiles(hot_df: DataFrame, z: int, cfg: TilingConfig, max_count: int,
-               split_budget: int, shared=None) -> DataFrame:
-    """Hierarchical split-and-merge for oversized tiles: sub-partition by
-    child quadkey (the next ``depth`` zoom levels of the feature's
-    representative point — spatially coherent split, SURVEY §4), prepare
-    each sub-partition independently, merge per tile for the sequential
-    stages.  ``depth`` is the number of child-quad levels that leaves
-    each sub-partition of the largest hot tile (``max_count`` rows) with
-    at most ``split_budget`` features."""
-    depth = 1
-    while (max_count >> (2 * depth)) > split_budget and depth < 8:
-        depth += 1
-    shift = WORLD_BITS - z
-    sub_shift = shift - depth
-    salt = (
-        F.shiftleft(
-            F.shiftright(F.col("minx"), sub_shift) - F.shiftleft(F.col("tx").cast("long"), depth),
-            depth,
-        )
-        + (F.shiftright(F.col("miny"), sub_shift) - F.shiftleft(F.col("ty").cast("long"), depth))
-    )
-    prepared_hot = (
-        hot_df.withColumn("salt", salt.cast("int"))
-        .groupBy("tx", "ty", "salt")
-        .applyInPandas(
-            lambda k, p: prepare_tile_pdf(p, z, cfg, shared),
-            schema=PREPARED_SCHEMA,
-        )
-    )
-    return prepared_hot.groupBy("tx", "ty").applyInPandas(
-        lambda k, p: finalize_tile_pdf(p, z, cfg), schema=_tile_schema(cfg)
-    )
-
-
 def tiles_fused(
     features: DataFrame,
     cfg: TilingConfig,
-    hot_by_zoom: dict[int, dict[tuple[int, int], int]] | None = None,
-    split_budget: int = 200_000,
     shared=None,
     z_lo: int | None = None,
     z_hi: int | None = None,
@@ -3653,11 +3585,12 @@ def tiles_fused(
     difference between 15 barriers and 1.  A single-zoom build is this
     over ``[z, z]``.
 
-    Hot tiles (``hot_by_zoom``: zoom → tile → feature count, tiles above
-    ``split_budget``) take the split-and-merge path and union in at the
-    end.  Under -at the ``vardepth.leaf_plan`` is planned here, once
-    per build.  ``est_rows`` is the caller's survivor-row estimate for
-    the range, which sizes the tile shuffle (:func:`_tile_partitions`)."""
+    Every tile, however dense, is built whole by one kernel call, as the
+    reference builds one tile in one thread: the hash of (zz, tx, ty)
+    over the shuffle's tasks is the only skew control.  Under -at the
+    ``vardepth.leaf_plan`` is planned here, once per build.
+    ``est_rows`` is the caller's survivor-row estimate for the range,
+    which sizes the tile shuffle (:func:`_tile_partitions`)."""
     lo = cfg.minzoom if z_lo is None else z_lo
     hi = cfg.maxzoom if z_hi is None else z_hi
     if not cfg.minzoom <= lo <= hi <= cfg.maxzoom:
@@ -3678,27 +3611,9 @@ def tiles_fused(
     else:
         # subtree fan-out: zooms < R ride per-(zoom, tile) rows; zooms
         # R..maxzoom ship once per (feature, zoom-R root) and expand in
-        # the kernel.  Hot deep tiles (and their whole subtree) fall back
-        # to per-(zoom, tile) rows so the split-and-merge path still
-        # bounds task latency.
+        # the kernel
         assigned = assign_tiles_all(featuresT, cfg, z_lo=lo, z_hi=R - 1)
-        hot_roots: set[int] = set()
-        for z, tiles_ in (hot_by_zoom or {}).items():
-            if z >= R:
-                for t, c in tiles_.items():
-                    if c > split_budget:
-                        hot_roots.add(
-                            ((t[0] >> (z - R)) << R) | (t[1] >> (z - R))
-                        )
-        sub_rows = _subtree_root_rows(featuresT, cfg, R, exclude_keys=hot_roots)
-        if hot_roots:
-            deep = assign_tiles_all(featuresT, cfg, z_lo=R)
-            anc = F.expr(
-                f"shiftleft(shiftright(cast(tx as bigint), zz - {R}), {R})"
-            ).bitwiseOR(F.expr(f"shiftright(cast(ty as bigint), zz - {R})"))
-            assigned = assigned.unionByName(
-                deep.filter(anc.isin([int(k) for k in hot_roots]))
-            )
+        sub_rows = _subtree_root_rows(featuresT, cfg, R)
     leaf_tiles = None
     if cfg.variable_depth_pyramid:
         # -at: confirm full-detail leaves, prune their subtrees from the
@@ -3708,30 +3623,6 @@ def tiles_fused(
         leaf_tiles, leaf_keys = vardepth.leaf_plan(featuresT, cfg, shared)
         assigned = vardepth.prune_assignment(assigned, leaf_keys, cfg)
         leaf_tiles = leaf_tiles.filter(F.col("z").between(lo, hi))
-    hot_parts = []
-    hot_conds = []
-    for z, tiles_ in (hot_by_zoom or {}).items():
-        hot = {t: c for t, c in tiles_.items() if c > split_budget}
-        if not hot:
-            continue
-        # per-zoom key (tx<<z)|ty fits signed int64 at every supported
-        # zoom (tx,ty < 2^z, z <= 31 ⇒ key < 2^62); a fixed 24-bit ty
-        # lane would collide tiles at z >= 25
-        keys = [(t[0] << z) | t[1] for t in hot]
-        key_col = F.shiftleft(F.col("tx").cast("long"), z).bitwiseOR(
-            F.col("ty").cast("long")
-        )
-        cond = (F.col("zz") == F.lit(z)) & key_col.isin(keys)
-        hot_conds.append(cond)
-        hot_parts.append(_hot_tiles(
-            assigned.filter(cond), z, cfg, max(hot.values()), split_budget, shared
-        ))
-    cold = assigned
-    if hot_conds:
-        any_hot = hot_conds[0]
-        for c in hot_conds[1:]:
-            any_hot = any_hot | c
-        cold = assigned.filter(~any_hot)
     # the build's key space is Σ 4^z over its zooms: more partitions
     # than keys are guaranteed-empty tasks (~4 ms of pure scheduling
     # each; a z4 build would schedule ~750 of them per stage)
@@ -3741,18 +3632,16 @@ def tiles_fused(
     # half the row bytes) never ride it
     kcols = [
         c for c in _STREAM_COLS + ("zz", "feature_maxzoom")
-        if c in cold.columns
+        if c in assigned.columns
     ]
-    shuffle_in = cold.select(*kcols)
+    shuffle_in = assigned.select(*kcols)
     if sub_rows is not None:
         shuffle_in = shuffle_in.unionByName(sub_rows.select(*kcols))
     shuffled = shuffle_in.repartition(
-        _tile_partitions(cold.sparkSession, key_space, est_rows),
+        _tile_partitions(assigned.sparkSession, key_space, est_rows),
         F.col("zz"), F.col("tx"), F.col("ty"),
     ).sortWithinPartitions("zz", "tx", "ty", "index", "seq")
     out = shuffled.mapInPandas(make_stream_kernel(cfg, shared), schema=_tile_schema(cfg))
-    for h in hot_parts:
-        out = out.unionByName(h)
     if leaf_tiles is not None:
         out = out.unionByName(leaf_tiles)
     return out
